@@ -56,8 +56,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     an UNEXECUTED scan plan, not data: every action still reads the
     parquet files (same semantics as holding the df in a variable,
     the normal Spark pattern).  The mtime key drops the cache when a
-    writer rewrites the directory; the gateway scoping in ``memo``
-    drops it across session restarts; ``SHADEMS_NO_EXPR_MEMO=1``
+    writer rewrites the directory; ``memo`` scopes it to the live
+    SparkContext, so a ``stop()`` and a new session in the same process
+    read the table afresh; ``SHADEMS_NO_EXPR_MEMO=1``
     disables it for A/B.
     """
     tune(spark)

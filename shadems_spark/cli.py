@@ -8,9 +8,11 @@ tables whose ``lineitem`` plays the MS MAIN table (vis.py mapping).
 
 Lifecycle (two Spark jobs, [R] data_plots.py): selection + derived
 axes as one declarative plan -> batched bounds job when limits are
-unset -> binned canvas aggregation -> engine-side shading -> PNG(s)
-via the stdlib renderer.  ``--iter-field`` facets through ONE raster
-plan whose groupBy carries the facet key — never a per-facet job.
+unset -> binned canvas aggregation, collected once by the renderer ->
+driver-side spread, shading and colouring of the canvas-bounded table
+-> PNG(s) via the stdlib writer.  A multi-plot grid and ``--iter``
+facets ride that one raster job too: the plot group is a column of
+the binned table, split on the driver — never a per-plot job.
 
     python -m shadems_spark /root/testdata/sf0.001 \
         -x time -y DATA:amp --field O --norm eq_hist --png out.png
@@ -215,44 +217,34 @@ def _run_grid(args, combos: list[tuple[str, str, str]], spark) -> list[str]:
         robust=args.robust, fixed=fixed,
     )
     ms_name = os.path.basename(os.path.normpath(args.ms))
+    paths = {
+        i: os.path.join(args.dir, _template(args.png, ms=ms_name, xname=xname, yname=yname, field=""))
+        for i, (xname, yname) in enumerate(names)
+        if i in ranges  # a combo with no finite samples draws nothing
+    }
+    return _render(
+        args, binned, paths,
+        x_range=lambda i: ranges[i][:2], y_range=lambda i: ranges[i][2:],
+        title=ms_name, xlabel=lambda i: names[i][0], ylabel=lambda i: names[i][1],
+    )
+
+
+def _render(args, binned, path, x_range, y_range, title, xlabel, ylabel, categories=None) -> list[str]:
+    """The one render call: every plot of ``binned`` (a per-plot
+    argument may be a dict or function of the plot group, see
+    render._at) as a bare canvas or, with --figure, a labeled figure."""
     os.makedirs(args.dir, exist_ok=True)
-    written: list[str] = []
-    # ONE raster job; the tiny binned grid splits driver-side per plot
-    rows = binned.collect()
-    by_plot: dict[int, list] = {}
-    for r in rows:
-        by_plot.setdefault(int(r["p"]), []).append(r)
-    for i, (xname, yname) in enumerate(names):
-        if i not in ranges:
-            continue  # no finite samples for this combo
-        one = spark.createDataFrame(
-            [
-                (r["by"], r["bx"], float(r["val"]))
-                for r in by_plot.get(i, [])
-                if r["val"] is not None
-            ],
-            "by long, bx long, val double",
+    kw = dict(
+        how=args.norm, cmap=args.cmap, categories=categories, spread_px=args.spread,
+        dynspread_threshold=0.5 if args.dynspread else None,
+        bgcol=None if args.bgcol == "none" else parse_color(args.bgcol),
+    )
+    if args.figure:
+        return render_figure(
+            binned, path, args.xcanvas, args.ycanvas, x_range, y_range,
+            title=title, xlabel=xlabel, ylabel=ylabel, **kw,
         )
-        xlo, xhi, ylo, yhi = ranges[i]
-        name = _template(
-            args.png, ms=ms_name, xname=xname, yname=yname, field="",
-        )
-        path = os.path.join(args.dir, name)
-        kw = dict(
-            how=args.norm, cmap=args.cmap, spread_px=args.spread,
-            dynspread_threshold=0.5 if args.dynspread else None,
-            bgcol=None if args.bgcol == "none" else parse_color(args.bgcol),
-        )
-        if args.figure:
-            render_figure(
-                one, path, args.xcanvas, args.ycanvas,
-                (xlo, xhi), (ylo, yhi),
-                title=ms_name, xlabel=xname, ylabel=yname, **kw,
-            )
-        else:
-            render_png(one, path, args.xcanvas, args.ycanvas, **kw)
-        written.append(path)
-    return written
+    return render_png(binned, path, args.xcanvas, args.ycanvas, **kw)
 
 
 def run(argv: list[str] | None = None, spark=None) -> list[str]:
@@ -343,66 +335,20 @@ def _run_single(args, xaxis: str, yaxis: str, col: str, spark) -> list[str]:
     )
 
     ms_name = os.path.basename(os.path.normpath(args.ms))
-    os.makedirs(args.dir, exist_ok=True)
-    written: list[str] = []
-
-    if facet:
-        # one plan: the facet key (materialized above) rides the raster
-        # groupBy; the tiny binned table splits driver-side
-        xr, yr = plot.bounds(df)
-        binned = R.raster(
-            df,
-            plot.x, plot.y, xr, yr, plot.width, plot.height,
-            reduction=reduction, value=value,
-            category=F.col("__facet"),
-        )
-        groups = sorted(r["cat"] for r in binned.select("cat").distinct().collect())
-        for grp in groups:
-            one = binned.filter(F.col("cat") == grp).drop("cat")
-            name = _template(
-                args.png, ms=ms_name, xname=xname, yname=yname,
-                field=f"_{grp}", group=f"_{grp}",
-            )
-            path = os.path.join(args.dir, name)
-            if args.figure:
-                render_figure(
-                    one, path, plot.width, plot.height, xr, yr,
-                    how=args.norm, cmap=args.cmap,
-                    title=f"{ms_name} {grp}", xlabel=xname, ylabel=yname,
-                    spread_px=args.spread,
-                    dynspread_threshold=0.5 if args.dynspread else None,
-                    bgcol=None if args.bgcol == "none" else parse_color(args.bgcol),
-                )
-            else:
-                render_png(
-                    one, path, plot.width, plot.height, how=args.norm, cmap=args.cmap,
-                    spread_px=args.spread,
-                    dynspread_threshold=0.5 if args.dynspread else None,
-                    bgcol=None if args.bgcol == "none" else parse_color(args.bgcol),
-                )
-            written.append(path)
-        return written
-
     xr, yr = plot.bounds(df)
-    binned = plot.run_with_ranges(df, xr, yr)
-    name = _template(args.png, ms=ms_name, xname=xname, yname=yname, field="")
-    path = os.path.join(args.dir, name)
-    if args.figure:
-        render_figure(
-            binned, path, plot.width, plot.height, xr, yr,
-            how=args.norm, cmap=args.cmap, categories=categories,
-            title=ms_name, xlabel=xname, ylabel=yname,
-            spread_px=args.spread,
-            dynspread_threshold=0.5 if args.dynspread else None,
-            bgcol=None if args.bgcol == "none" else parse_color(args.bgcol),
-        )
-    else:
-        render_png(
-            binned, path, plot.width, plot.height,
-            how=args.norm, cmap=args.cmap, categories=categories,
-            spread_px=args.spread,
-            dynspread_threshold=0.5 if args.dynspread else None,
-            bgcol=None if args.bgcol == "none" else parse_color(args.bgcol),
-        )
-    written.append(path)
-    return written
+    if not facet:
+        binned = plot.run_with_ranges(df, xr, yr)
+        path = os.path.join(args.dir, _template(args.png, ms=ms_name, xname=xname, yname=yname, field=""))
+        return _render(args, binned, path, xr, yr, ms_name, xname, yname, categories)
+    # one plan: the facet key (materialized above) rides the raster
+    # groupBy as the plot group; the renderer splits the collected table
+    binned = R.raster(
+        df, plot.x, plot.y, xr, yr, plot.width, plot.height,
+        reduction=reduction, value=value, category=F.col("__facet"),
+    ).withColumnRenamed("cat", "p")
+
+    def path(grp):
+        name = _template(args.png, ms=ms_name, xname=xname, yname=yname, field=f"_{grp}", group=f"_{grp}")
+        return os.path.join(args.dir, name)
+
+    return _render(args, binned, path, xr, yr, lambda grp: f"{ms_name} {grp}", xname, yname)

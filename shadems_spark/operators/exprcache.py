@@ -17,7 +17,7 @@ Rules for call sites:
   direction flags) — never on Column objects (no stable identity);
 - only cache fragments built from literals/column NAMES, never ones
   closing over a DataFrame;
-- the cache is automatically scoped to the live JVM gateway, so a
+- the cache is automatically scoped to the live SparkContext, so a
   session restart within one process can never serve stale Java refs.
 
 ``SHADEMS_NO_EXPR_MEMO=1`` disables caching (A/B measurement).
@@ -37,17 +37,19 @@ _CACHE: dict = {}
 #: overflow is correct by construction (it is a pure cache).
 _MAX_ENTRIES = 8192
 
-#: Token of the gateway the current cache contents belong to.  Keying
-#: on ``id(sc._gateway)`` (the r11 scheme) could alias a NEW gateway
-#: onto a dead one's key after garbage collection reused the id
-#: (ADVICE r11); a sentinel object ATTACHED to the gateway is unique
-#: per live instance — a rebuilt gateway lacks the attribute, gets a
-#: fresh token, and the stale entries are dropped wholesale.
+#: Token of the SparkContext the current cache contents belong to.
+#: PySpark keeps ``SparkContext._gateway`` across ``stop()``, so the
+#: gateway cannot tell a restarted session from the old one; each
+#: SparkContext object is new per session.  Keying on ``id(sc)`` could
+#: alias a new context onto a dead one's key after garbage collection
+#: reused the id, so a sentinel object ATTACHED to the context is used:
+#: a new context lacks the attribute, gets a fresh token, and the stale
+#: entries are dropped wholesale.
 _OWNER_TOKEN: object | None = None
 
 
 def memo(key: tuple, build):
-    """Return ``build()`` cached under ``key`` (+ the live gateway)."""
+    """Return ``build()`` cached under ``key`` (+ the live SparkContext)."""
     # explicit truthy parse (ADVICE r11): SHADEMS_NO_EXPR_MEMO=0 must
     # NOT disable memoization just by being set.
     if os.environ.get("SHADEMS_NO_EXPR_MEMO", "").lower() in (
@@ -58,17 +60,11 @@ def memo(key: tuple, build):
 
     sc = SparkContext._active_spark_context
     global _OWNER_TOKEN
+    tok = None
     if sc is not None:
-        gw = sc._gateway
-        tok = getattr(gw, "_shadems_memo_token", None)
+        tok = getattr(sc, "_shadems_memo_token", None)
         if tok is None:
-            tok = object()
-            try:
-                gw._shadems_memo_token = tok
-            except AttributeError:  # pragma: no cover - slots-only gw
-                tok = None
-    else:
-        tok = None
+            tok = sc._shadems_memo_token = object()
     if tok is not _OWNER_TOKEN:
         _CACHE.clear()
         _OWNER_TOKEN = tok

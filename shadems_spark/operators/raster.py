@@ -42,12 +42,19 @@ REDUCTIONS = {
 
 
 def bin_axis(col: Column, lo: float, hi: float, n: int) -> Column:
-    """G1: pixel index of ``col`` on an n-bin axis over [lo, hi]."""
+    """G1: pixel index of ``col`` on an n-bin axis over [lo, hi].  A
+    zero-width axis (a constant column, hi <= lo) bins every row to 0,
+    like :func:`grid_raster`; deciding it from the literals keeps every
+    other plan unchanged."""
+    if hi <= lo:
+        return F.lit(0).cast("long")
     return F.least(F.lit(n - 1).cast("long"), F.floor((col - lo) / (hi - lo) * n))
 
 
 def bin_axis_sql(expr: str, lo: float, hi: float, n: int) -> str:
     """The formula-identical DuckDB fragment for :func:`bin_axis`."""
+    if hi <= lo:
+        return "CAST(0 AS BIGINT)"
     return (
         f"least(CAST({n - 1} AS BIGINT), "
         f"CAST(FLOOR(({expr} - {lo!r}) / ({hi!r} - {lo!r}) * {n}) AS BIGINT))"

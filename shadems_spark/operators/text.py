@@ -384,7 +384,8 @@ def _xe_grams_pa(arr, n: int):
     # a ListArray's int32 offsets would silently WRAP past 2^31 kept
     # grams per batch (unreachable at default Arrow batch sizes, but
     # unchecked would corrupt rather than fail — ADVICE r11)
-    assert offsets[-1] < 2**31, "gram count exceeds int32 ListArray offsets"
+    if offsets[-1] >= 2**31:
+        raise ValueError("gram count exceeds int32 ListArray offsets")
     offsets = offsets.astype(np.int32)
     return pa.ListArray.from_arrays(
         pa.array(offsets), pa.array(kept, type=pa.int64()),
@@ -502,7 +503,8 @@ def _word_ngrams_pa(arr, n: int):
     # a ListArray's int32 offsets would silently WRAP past 2^31 kept
     # grams per batch (unreachable at default Arrow batch sizes, but
     # unchecked would corrupt rather than fail — ADVICE r11)
-    assert offsets[-1] < 2**31, "gram count exceeds int32 ListArray offsets"
+    if offsets[-1] >= 2**31:
+        raise ValueError("gram count exceeds int32 ListArray offsets")
     offsets = offsets.astype(np.int32)
     return pa.ListArray.from_arrays(
         pa.array(offsets), kept_str,

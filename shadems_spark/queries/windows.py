@@ -69,9 +69,9 @@ def q_eq_hist(spark, sf_dir):
 def q_norms(spark, sf_dir):
     """W2: log / cbrt / linear normalizations rescaled to [0,1] —
     all three scales' min/max ride ONE 1-row broadcast aggregate of
-    the binned raster (three chained N.norm calls would each carry
-    their own aggregate branch of the raster lineage); same values
-    as the per-scale helper."""
+    the binned raster (three per-scale passes would each carry their
+    own aggregate branch of the raster lineage); same formulas as the
+    renderer's driver-side shading (render.shade_values)."""
     out = _binned(spark, sf_dir)
     v = F.col("val").cast("double")
     exprs = {

@@ -1,13 +1,15 @@
-"""PNG sink — the thin driver-side renderer (SURVEY.md §2 A4).
+"""PNG sink — the driver-side renderer (SURVEY.md §2 A4).
 
 The engine's raster result is the *binned table* (≤ W·H·ncat rows by
 construction); shadeMS hands the equivalent xarray raster to
 ``datashader.transfer_functions.shade`` + matplotlib ([R]
-shade_ms/data_plots.py::create_plot tail ≈L300-420).  Here shading
-(normalization) runs engine-side (operators/normalize.py window fns),
-and this module only colorizes the collected pixels and writes a PNG
-with the stdlib (zlib/struct) — no matplotlib/datashader dependency,
-so the sink works in any executor-less driver environment.
+shade_ms/data_plots.py::create_plot tail ≈L300-420).  Here the
+renderer collects the binned table once and does everything after
+binning on the driver in numpy: the split into plots, spread and
+dynspread, shading (eq_hist / log / cbrt / linear) and colouring.
+It writes PNGs with the stdlib (zlib/struct) — no matplotlib or
+datashader dependency, so the sink works in any executor-less driver
+environment.
 
 Scale note: collect() here is safe at any input scale because the
 binned table's size is bounded by the canvas, not the data.
@@ -21,8 +23,6 @@ import zlib
 import numpy as np
 
 from pyspark.sql import DataFrame
-
-from shadems_spark.operators.normalize import eq_hist, eq_hist_interp, norm
 
 #: colormap name -> anchor colors (linear-interpolated, 256-entry LUT).
 #: Names follow the colorcet/matplotlib/cmasher families shadeMS
@@ -91,99 +91,81 @@ def lut(cmap: str) -> np.ndarray:
     return np.stack(chans, axis=1).round().astype(np.uint8)
 
 
-def shade(binned: DataFrame, how: str = "eq_hist", val: str = "val") -> DataFrame:
-    """Engine-side normalization dispatch (W1/W2): shade ∈ [0,1]."""
+def shade_values(val: np.ndarray, how: str = "eq_hist") -> np.ndarray:
+    """tf.shade(how=...) normalization of the occupied pixels' values to
+    [0, 1].  eq_hist is the empirical CDF over those pixels, count(<= v)
+    / N (ties shade alike; ``normalize.eq_hist`` is the engine-side
+    reference); log/cbrt/linear rescale by the plot's min/max, and a
+    plot whose values are all equal shades 1.0, as eq_hist does."""
     if how == "eq_hist":
-        return eq_hist(binned, val=val)
-    if how == "eq_hist_interp":
-        return eq_hist_interp(binned, val=val)
-    return norm(binned, how, val=val)
+        return np.searchsorted(np.sort(val), val, side="right") / float(len(val))
+    t = {"log": lambda v: np.log(1.0 + v), "cbrt": np.cbrt, "linear": lambda v: v}[how](val)
+    if not len(t):
+        return t
+    lo, hi = t.min(), t.max()
+    if hi == lo:
+        return np.ones_like(t)
+    return (t - lo) / (hi - lo)
 
 
-def spread(
-    binned: DataFrame, px: int, width: int, height: int,
-    val: str = "val", extra_keys: list[str] | None = None, how: str = "max",
-) -> DataFrame:
-    """tf.spread on the BINNED table ([R] data_plots.py::create_plot
-    applies datashader spreading to the shaded image): each occupied
-    pixel paints its (2px+1)² neighbourhood; overlaps combine by
-    ``how`` (max keeps counts un-inflated; sum mimics additive
-    compositing).
+def _box(a: np.ndarray, px: int, op) -> np.ndarray:
+    """``op``-reduce each cell's (2px+1)² neighbourhood of a canvas
+    array, clipped at the edges (separable: along rows, then columns)."""
+    for _ in range(2):
+        src, a = a, a.copy()
+        for s in range(1, px + 1):
+            op(a[s:], src[:-s], out=a[s:])
+            op(a[:-s], src[s:], out=a[:-s])
+        a = a.T
+    return a
 
-    Engine-side and scale-free: one explode of the ≤W·H-row binned
-    table over the literal offset array, one groupBy back onto pixel
-    keys — never touches the source data."""
-    from pyspark.sql import functions as F
 
+def spread(pix: dict, px: int, width: int, height: int) -> dict:
+    """tf.spread on one plot's binned pixels ([R] data_plots.py::
+    create_plot applies datashader spreading to the shaded image):
+    each occupied pixel paints its (2px+1)² neighbourhood, clipped to
+    the canvas; overlaps keep the max value, so counts are not
+    inflated.  Each colour category spreads on its own canvas."""
     if px <= 0:
-        return binned
-    keys = list(extra_keys or [])
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in range(-px, px + 1)
-            for dy in range(-px, px + 1)
-        ]
-    )
-    ex = (
-        binned.withColumn("__o", F.explode(offs))
-        .select(
-            (F.col("bx") + F.col("__o.dx")).alias("bx"),
-            (F.col("by") + F.col("__o.dy")).alias("by"),
-            F.col(val), *[F.col(k) for k in keys],
-        )
-        .filter(
-            (F.col("bx") >= 0) & (F.col("bx") < width)
-            & (F.col("by") >= 0) & (F.col("by") < height)
-        )
-    )
-    agg = {"max": F.max, "sum": F.sum}[how](F.col(val)).alias(val)
-    return ex.groupBy("bx", "by", *keys).agg(agg)
-
-
-def _isolated_fraction(binned: DataFrame, d: int = 1) -> float:
-    """Share of occupied pixels with NO occupied neighbour within
-    Chebyshev distance ``d`` (the tiny binned table; two small jobs)."""
-    from pyspark.sql import functions as F
-
-    total = binned.count()
-    if total == 0:
-        return 0.0
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in range(-d, d + 1)
-            for dy in range(-d, d + 1)
-            if (dx, dy) != (0, 0)
-        ]
-    )
-    shifted = (
-        binned.withColumn("__o", F.explode(offs))
-        .select(
-            (F.col("bx") + F.col("__o.dx")).alias("bx"),
-            (F.col("by") + F.col("__o.dy")).alias("by"),
-        )
-        .distinct()
-    )
-    with_neighbor = binned.join(shifted, ["bx", "by"], "left_semi").count()
-    return 1.0 - with_neighbor / total
+        return pix
+    cat = pix.get("cat")
+    if cat is None:
+        codes = np.zeros(len(pix["val"]), dtype=np.int64)
+    else:
+        codes = np.unique(cat, return_inverse=True)[1]
+    out: dict[str, list] = {k: [] for k in pix}
+    for code in np.unique(codes):
+        sel = codes == code
+        by, bx = pix["by"][sel], pix["bx"][sel]
+        occ = np.zeros((height, width), dtype=bool)
+        occ[by, bx] = True
+        val = np.full((height, width), -np.inf)
+        val[by, bx] = pix["val"][sel]
+        by, bx = np.nonzero(_box(occ, px, np.maximum))
+        out["by"].append(by)
+        out["bx"].append(bx)
+        out["val"].append(_box(val, px, np.maximum)[by, bx])
+        if cat is not None:
+            out["cat"].append(np.repeat(cat[sel][:1], len(by)))
+    return {k: np.concatenate(v) if v else pix[k] for k, v in out.items()}
 
 
 def dynspread(
-    binned: DataFrame, width: int, height: int,
-    max_px: int = 3, threshold: float = 0.5,
-    val: str = "val", extra_keys: list[str] | None = None,
-) -> DataFrame:
+    pix: dict, width: int, height: int, max_px: int = 3, threshold: float = 0.5,
+) -> dict:
     """tf.dynspread semantics: spread sparse plots, leave dense ones
     alone — grow px from 0 until the fraction of occupied pixels that
     have an occupied neighbour reaches ``threshold`` (datashader's
-    definition), capped at ``max_px``.  All probing runs on the binned
-    table, so the cost is independent of the input data size."""
+    definition), capped at ``max_px``."""
     for px in range(max_px + 1):
-        spread_now = spread(binned, px, width, height, val, extra_keys)
-        if 1.0 - _isolated_fraction(spread_now, 1) >= threshold:
-            return spread_now
-    return spread(binned, max_px, width, height, val, extra_keys)
+        out = spread(pix, px, width, height)
+        occ = np.zeros((height, width), dtype=np.int32)
+        occ[out["by"], out["bx"]] = 1
+        # occupied cells within Chebyshev distance 1, the cell itself excluded
+        has = (_box(occ, 1, np.add) - occ)[out["by"], out["bx"]] > 0
+        if not has.size or has.mean() >= threshold:
+            break
+    return out
 
 
 #: background colour names ([R] shade_ms --bgcol); hex also accepted.
@@ -203,16 +185,17 @@ def parse_color(name: str) -> tuple[int, int, int]:
 
 
 def raster_to_rgba(
-    rows, width: int, height: int, cmap: str = "viridis", categories: list | None = None,
+    pix, width: int, height: int, cmap: str = "viridis", categories: list | None = None,
     bgcol: tuple[int, int, int] | None = None,
 ) -> np.ndarray:
-    """Collected shaded pixels -> H×W×4 RGBA (row 0 = top scanline).
+    """One plot's shaded pixels -> H×W×4 RGBA (row 0 = top scanline).
 
-    ``rows`` carry (bx, by, shade[, cat]).  Continuous rasters map
+    ``pix`` maps column names to equal-length arrays: bx, by, shade,
+    plus val and cat for a categorical raster.  Continuous rasters map
     shade through the LUT; categorical rasters mix the palette colors
     of each pixel's categories weighted by their counts (the
     datashader count_cat color-mixing idea) with alpha from the
-    pixel-total shade.
+    largest shade among them.
     """
     img = np.zeros((height, width, 4), dtype=np.uint8)
     if bgcol is not None:
@@ -221,27 +204,28 @@ def raster_to_rgba(
         # background instead of transparency.
         img[:, :, :3] = bgcol
         img[:, :, 3] = 255
-    table = lut(cmap)
-    if categories is None:
-        for r in rows:
-            bx, by, s = int(r["bx"]), int(r["by"]), float(r["shade"])
-            c = table[min(255, int(s * 255.0))]
-            img[height - 1 - by, bx] = (c[0], c[1], c[2], 255)
+    row, col = height - 1 - np.asarray(pix["by"]), np.asarray(pix["bx"])
+    shade = np.asarray(pix["shade"], dtype=np.float64)
+    if not len(shade):
         return img
-    cat_idx = {c: i for i, c in enumerate(categories)}
-    acc = np.zeros((height, width, 3), dtype=np.float64)
-    wsum = np.zeros((height, width), dtype=np.float64)
-    alpha = np.zeros((height, width), dtype=np.float64)
-    for r in rows:
-        bx, by = int(r["bx"]), int(r["by"])
-        color = PALETTE[cat_idx[r["cat"]] % len(PALETTE)]
-        n = float(r["val"])
-        acc[height - 1 - by, bx] += np.array(color, dtype=np.float64) * n
-        wsum[height - 1 - by, bx] += n
-        alpha[height - 1 - by, bx] = max(alpha[height - 1 - by, bx], float(r["shade"]))
+    if categories is None:
+        img[row, col, :3] = lut(cmap)[np.minimum(255, (shade * 255.0).astype(np.int64))]
+        img[row, col, 3] = 255
+        return img
+    cats, inv = np.unique(pix["cat"], return_inverse=True)
+    palette = np.array(PALETTE, dtype=np.float64)
+    color = palette[[categories.index(c) % len(PALETTE) for c in cats]][inv]
+    n = np.asarray(pix["val"], dtype=np.float64)
+    # bincount adds in row order, like a per-row loop would
+    flat, size = row * width + col, height * width
+    acc = np.stack([np.bincount(flat, color[:, i] * n, size) for i in range(3)], axis=1)
+    wsum = np.bincount(flat, n, size)
+    alpha = np.zeros(size)
+    np.maximum.at(alpha, flat, shade)
     mask = wsum > 0
-    img[mask, :3] = (acc[mask] / wsum[mask, None]).round().astype(np.uint8)
-    img[mask, 3] = (alpha[mask] * 255.0).round().astype(np.uint8)
+    out = img.reshape(size, 4)
+    out[mask, :3] = (acc[mask] / wsum[mask, None]).round().astype(np.uint8)
+    out[mask, 3] = (alpha[mask] * 255.0).round().astype(np.uint8)
     return img
 
 
@@ -269,9 +253,62 @@ def write_png(path: str, rgba: np.ndarray) -> None:
         f.write(payload)
 
 
+def _columns(rows) -> dict[str, np.ndarray]:
+    """Collected binned rows -> one array per column.  Rows whose value
+    is null (a reduction over null samples only) have nothing to shade
+    and are dropped."""
+    if not rows:
+        return {"bx": np.zeros(0, np.int64), "by": np.zeros(0, np.int64), "val": np.zeros(0)}
+    cols = dict(zip(rows[0].__fields__, map(np.array, zip(*rows))))
+    keep = np.not_equal(cols["val"], None)
+    cols = {k: v[keep] for k, v in cols.items()}
+    cols["val"] = cols["val"].astype(np.float64)
+    return cols
+
+
+def _at(arg, group):
+    """A per-plot argument: a {group: value} dict, a function of the
+    group, or one value for every plot."""
+    if isinstance(arg, dict):
+        return arg[group]
+    return arg(group) if callable(arg) else arg
+
+
+def _rasters(rows, path, width, height, how, cmap, categories, spread_px, dynspread_threshold, bgcol):
+    """The body both renderers share: the collected binned table split
+    into plots, each spread, shaded and coloured.  Yields (group,
+    output path, shaded pixels, RGBA raster) per plot.
+
+    ``path`` is a str for a table of one plot.  A table with a plot
+    group column ``p`` (the grid combo or the facet key) takes a
+    {group: path} dict, which draws every key, also one with no pixels,
+    or a function of the group, which draws each group present."""
+    cols = _columns(rows)
+    if isinstance(path, str):
+        plots = {None: cols}
+    else:
+        p = cols.pop("p", np.zeros(0))
+        order = np.argsort(p, kind="stable")
+        keys, starts = np.unique(p[order], return_index=True)
+        found = {
+            k: {n: v[idx] for n, v in cols.items()}
+            for k, idx in zip(keys, np.split(order, starts[1:]))
+        }
+        empty = {n: v[:0] for n, v in cols.items()}
+        plots = {g: found.get(g, empty) for g in (path if isinstance(path, dict) else keys)}
+    for g, pix in plots.items():
+        if dynspread_threshold is not None:
+            pix = dynspread(pix, width, height, threshold=dynspread_threshold)
+        elif spread_px:
+            pix = spread(pix, spread_px, width, height)
+        pix = {**pix, "shade": shade_values(pix["val"], how)}
+        img = raster_to_rgba(pix, width, height, cmap=cmap, categories=categories, bgcol=bgcol)
+        yield g, _at(path, g), pix, img
+
+
 def render_png(
     binned: DataFrame,
-    path: str,
+    path,
     width: int,
     height: int,
     how: str = "eq_hist",
@@ -280,70 +317,63 @@ def render_png(
     spread_px: int = 0,
     dynspread_threshold: float | None = None,
     bgcol: tuple[int, int, int] | None = None,
-) -> str:
-    """Binned table -> (spread) -> shaded PNG file; returns the path."""
-    keys = ["cat"] if categories is not None else None
-    if dynspread_threshold is not None:
-        binned = dynspread(
-            binned, width, height, threshold=dynspread_threshold, extra_keys=keys
-        )
-    elif spread_px:
-        binned = spread(binned, spread_px, width, height, extra_keys=keys)
-    shaded = shade(binned, how=how)
-    rows = shaded.collect()
-    img = raster_to_rgba(
-        rows, width, height, cmap=cmap, categories=categories, bgcol=bgcol
-    )
-    write_png(path, img)
-    return path
+) -> list[str]:
+    """Binned table -> (spread) -> one shaded PNG per plot (``path`` as
+    in :func:`_rasters`); returns the paths written."""
+    written = []
+    for _g, out, _pix, img in _rasters(
+        binned.collect(), path, width, height, how, cmap, categories,
+        spread_px, dynspread_threshold, bgcol,
+    ):
+        write_png(out, img)
+        written.append(out)
+    return written
 
 
 def render_figure(
     binned: DataFrame,
-    path: str,
+    path,
     width: int,
     height: int,
-    x_range: tuple[float, float],
-    y_range: tuple[float, float],
+    x_range,
+    y_range,
     how: str = "eq_hist",
     cmap: str = "viridis",
     categories: list | None = None,
-    title: str = "",
-    xlabel: str = "",
-    ylabel: str = "",
+    title="",
+    xlabel="",
+    ylabel="",
     spread_px: int = 0,
     dynspread_threshold: float | None = None,
     bgcol: tuple[int, int, int] | None = None,
-) -> str:
-    """Binned table -> labeled FIGURE png: the raster composed with
-    axes, tick labels, title and a colorbar (continuous) or category
-    legend ([R] data_plots.py::create_plot tail; VERDICT r03 #3).
-    Same engine-side pipeline as render_png, plus the deterministic
-    stdlib composition in shadems_spark.figure."""
+) -> list[str]:
+    """Binned table -> one labeled FIGURE png per plot: the raster
+    composed with axes, tick labels, title and a colorbar (continuous)
+    or category legend ([R] data_plots.py::create_plot tail; VERDICT
+    r03 #3).  Same shared body as render_png, plus the deterministic
+    composition in shadems_spark.figure.  ``x_range``, ``y_range``,
+    ``title``, ``xlabel`` and ``ylabel`` may vary per plot like
+    ``path`` (see :func:`_at`); returns the paths written."""
     from shadems_spark.figure import compose_figure
 
-    keys = ["cat"] if categories is not None else None
-    if dynspread_threshold is not None:
-        binned = dynspread(
-            binned, width, height, threshold=dynspread_threshold, extra_keys=keys
+    written = []
+    for g, out, pix, raster in _rasters(
+        binned.collect(), path, width, height, how, cmap, categories,
+        spread_px, dynspread_threshold, None,
+    ):
+        val = pix["val"]
+        fig = compose_figure(
+            raster,
+            x_range=_at(x_range, g),
+            y_range=_at(y_range, g),
+            title=_at(title, g),
+            xlabel=_at(xlabel, g),
+            ylabel=_at(ylabel, g),
+            cmap=None if categories is not None else cmap,
+            shade_range=(float(val.min()), float(val.max())) if len(val) else (0.0, 0.0),
+            categories=categories,
+            bgcol=bgcol if bgcol is not None else (255, 255, 255),
         )
-    elif spread_px:
-        binned = spread(binned, spread_px, width, height, extra_keys=keys)
-    shaded = shade(binned, how=how)
-    rows = shaded.collect()
-    raster = raster_to_rgba(rows, width, height, cmap=cmap, categories=categories)
-    vals = [float(r["val"]) for r in rows] or [0.0]
-    fig = compose_figure(
-        raster,
-        x_range=x_range,
-        y_range=y_range,
-        title=title,
-        xlabel=xlabel,
-        ylabel=ylabel,
-        cmap=None if categories is not None else cmap,
-        shade_range=(min(vals), max(vals)),
-        categories=categories,
-        bgcol=bgcol if bgcol is not None else (255, 255, 255),
-    )
-    write_png(path, fig)
-    return path
+        write_png(out, fig)
+        written.append(out)
+    return written

@@ -4,6 +4,7 @@ raster -> shaded PNG, deterministically."""
 
 from __future__ import annotations
 
+import itertools
 import struct
 import zlib
 
@@ -55,8 +56,8 @@ def test_lut_endpoints():
 
 def test_raster_orientation():
     """by=0 must land on the BOTTOM scanline (y axis points up)."""
-    rows = [{"bx": 0, "by": 0, "shade": 1.0}]
-    img = raster_to_rgba(rows, width=2, height=3, cmap="grey")
+    pix = {"bx": [0], "by": [0], "shade": [1.0]}
+    img = raster_to_rgba(pix, width=2, height=3, cmap="grey")
     assert img[2, 0, 3] == 255 and img[0, 0, 3] == 0
 
 
@@ -204,28 +205,31 @@ def test_cli_row_chunk_size_is_rows_per_chunk(tmp_path, spark, sf_dir):
     assert _png_size(paths[0])[:2] == (8, 8)
 
 
-def test_spread_neighborhood_max(spark):
-    """tf.spread semantics on the binned table: one occupied pixel
-    paints its (2px+1)² neighbourhood, clipped to the canvas, max on
-    overlap."""
+def test_spread_neighborhood_max():
+    """tf.spread semantics on one plot's binned pixels: one occupied
+    pixel paints its (2px+1)² neighbourhood, clipped to the canvas, max
+    on overlap."""
     from shadems_spark.render import dynspread, spread
 
-    binned = spark.createDataFrame(
-        [(0, 0, 9), (5, 5, 4)], "bx int, by int, val long"
-    )
-    out = {(r["bx"], r["by"]): r["val"] for r in spread(binned, 1, 8, 8).collect()}
+    def pix(cells):
+        bx, by, val = (np.array(c) for c in zip(*cells))
+        return {"bx": bx, "by": by, "val": val.astype(np.float64)}
+
+    def as_dict(p):
+        return {(int(x), int(y)): v for x, y, v in zip(p["bx"], p["by"], p["val"])}
+
+    binned = pix([(0, 0, 9), (5, 5, 4)])
+    out = as_dict(spread(binned, 1, 8, 8))
     # corner pixel clips to 4 cells; interior paints 9
     assert len(out) == 4 + 9
     assert out[(0, 0)] == 9 and out[(1, 1)] == 9
     assert out[(4, 4)] == 4 and out[(6, 6)] == 4
     assert (7, 7) not in out
     # dynspread: two isolated points -> spreads; a dense block -> no-op
-    dyn = {(r["bx"], r["by"]) for r in dynspread(binned, 8, 8, max_px=2).collect()}
+    dyn = set(as_dict(dynspread(binned, 8, 8, max_px=2)))
     assert len(dyn) > 2
-    dense = spark.createDataFrame(
-        [(x, y, 1) for x in range(4) for y in range(4)], "bx int, by int, val long"
-    )
-    assert dynspread(dense, 8, 8).count() == 16
+    dense = pix([(x, y, 1) for x in range(4) for y in range(4)])
+    assert len(dynspread(dense, 8, 8)["val"]) == 16
 
 
 def test_cli_spread_golden_pixels(tmp_path, spark, sf_dir):
@@ -530,3 +534,63 @@ def test_cli_multiplot_with_colour_falls_back_per_combo(
         spark=spark,
     )
     assert len(paths) == 2
+
+
+def test_cli_constant_raster_norms(tmp_path, spark, sf_dir):
+    """A raster whose occupied pixels all hold the same value (--ared
+    any) shades them all 1.0 under log and linear, as eq_hist does,
+    instead of dividing by a zero value range."""
+    top = tuple(lut("viridis")[255])
+    for norm in ("linear", "log"):
+        path = cli.run(
+            [
+                sf_dir, "-x", "time", "-y", "amp", "--ared", "any", "-a", "DATA:amp",
+                "--norm", norm, "--bgcol", "none", "--xcanvas", "16", "--ycanvas", "16",
+                "--dir", str(tmp_path), "--png", f"const_{norm}.png",
+            ],
+            spark=spark,
+        )[0]
+        img = _decode_png(_png_size(path)[2])
+        occupied = img[:, :, 3] > 0
+        assert occupied.any()
+        assert {tuple(c) for c in img[occupied, :3]} == {top}
+
+
+def test_cli_constant_axis_single_plot(tmp_path, spark, sf_dir):
+    """A single plot whose x axis is constant (one channel) bins every
+    sample into the first column, as the multi-plot grid does."""
+    path = cli.run(
+        [
+            sf_dir, "-x", "chan", "-y", "amp", "--nchan", "1", "--bgcol", "none",
+            "--xcanvas", "16", "--ycanvas", "16",
+            "--dir", str(tmp_path), "--png", "chan1.png",
+        ],
+        spark=spark,
+    )[0]
+    occupied = _decode_png(_png_size(path)[2])[:, :, 3] > 0
+    assert occupied[:, 0].any() and not occupied[:, 1:].any()
+
+
+def test_cli_spark_jobs_per_run(tmp_path, spark, sf_dir):
+    """Facets, dynspread and a multi-plot grid are split, spread and
+    shaded on the driver from the one collected raster: none of them
+    starts more Spark jobs than the same single plot."""
+    sc = spark.sparkContext
+    base = [sf_dir, "-y", "amp", "--xcanvas", "16", "--ycanvas", "16", "--dir", str(tmp_path)]
+    ids = itertools.count()
+
+    def jobs(*argv):
+        group = f"jobs-per-run-{next(ids)}"
+        sc.setJobGroup(group, group)
+        try:
+            cli.run(base + list(argv), spark=spark)
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs("-x", "time")  # a session's first plot also reads the parquet schema
+    single = jobs("-x", "time")
+    assert single > 0
+    assert jobs("-x", "time", "--iter", "corr") <= single
+    assert jobs("-x", "time", "--dynspread") <= single
+    assert jobs("-x", "time,uvdist") <= single

@@ -131,3 +131,31 @@ def test_python_datasource_sink_roundtrip(spark, tmp_path):
     assert names and all(n.startswith("part-") for n in names)  # no temp leftovers
     back = spark.read.schema("id long, bucket int, val double").csv(out)
     assert {tuple(r) for r in back.collect()} == {tuple(r) for r in df.collect()}
+
+
+def test_load_table_after_session_restart(sf_dir):
+    """A table loaded in a session that was stopped is not served to
+    the next session in the same process: PySpark keeps the JVM
+    gateway across ``stop()``, so the scan memo must follow the
+    SparkContext.  Runs in a subprocess so the shared test session is
+    left alone."""
+    import os
+    import subprocess
+    import sys
+
+    code = f"""
+from shadems_spark.catalog import load_table
+from shadems_spark.session import get_spark
+spark = get_spark("restart-1")
+n = load_table(spark, {sf_dir!r}, "nation").count()
+spark.stop()
+spark = get_spark("restart-2")
+assert load_table(spark, {sf_dir!r}, "nation").count() == n
+print("ok")
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(catalog.__file__)))
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "PYTHONPATH": root}
+    p = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, timeout=300, env=env,
+    )
+    assert p.returncode == 0 and p.stdout.strip().endswith("ok"), p.stderr[-2000:]

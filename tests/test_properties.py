@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -18,6 +19,7 @@ from shadems_spark.operators import raster as R
 from shadems_spark.operators.mappers import baseline_index
 from shadems_spark.operators.normalize import eq_hist
 from shadems_spark.operators.text import ngram_hashes, word_ngrams, words
+from shadems_spark.render import shade_values
 
 SETTINGS = dict(
     max_examples=12,
@@ -104,6 +106,10 @@ def test_eq_hist_range_and_monotone(spark, vals):
         assert a["shade"] <= b["shade"]
         if a["val"] == b["val"]:
             assert a["shade"] == b["shade"]  # ties shade identically
+    # the renderer's driver-side shading equals this engine-side
+    # reference bit for bit on the same binned table
+    val = np.array([r["val"] for r in rows], dtype=np.float64)
+    assert shade_values(val, "eq_hist").tolist() == [r["shade"] for r in rows]
 
 
 @given(
