@@ -10,9 +10,11 @@ Lifecycle (two Spark jobs, [R] data_plots.py): selection + derived
 axes as one declarative plan -> batched bounds job when limits are
 unset -> binned canvas aggregation, collected once by the renderer ->
 driver-side spread, shading and colouring of the canvas-bounded table
--> PNG(s) via the stdlib writer.  A multi-plot grid and ``--iter``
-facets ride that one raster job too: the plot group is a column of
-the binned table, split on the driver — never a per-plot job.
+-> PNG(s) via the stdlib writer.  Every request takes this one path:
+a single plot is a grid of one (x, y, col) combo, every combo is an
+element of one sample table, and ``--colour-by``/``--iter`` keys join
+the raster groupBy.  The plot group is a column of the binned table,
+split on the driver — never a per-plot job.
 
     python -m shadems_spark /root/testdata/sf0.001 \
         -x time -y DATA:amp --field O --norm eq_hist --png out.png
@@ -21,6 +23,8 @@ the binned table, split on the driver — never a per-plot job.
 from __future__ import annotations
 
 import argparse
+import functools
+import operator
 import os
 
 from pyspark.sql import functions as F
@@ -183,52 +187,6 @@ def _prepare(args, spark, specs: list[str]):
     return df
 
 
-def _run_grid(args, combos: list[tuple[str, str, str]], spark) -> list[str]:
-    """Multi-plot grid through ONE extract (operators/raster.
-    grid_raster): every (x, y, col) combo binned from a single scan;
-    the conjugate u/v mirror rides as an extra exploded sample, never
-    a second pass."""
-    specs = [s for xs, ys, _ in combos for s in (xs, ys)]
-    if args.aaxis:
-        specs.append(args.aaxis)
-    df = _prepare(args, spark, specs)
-    value = None
-    if args.aaxis:
-        df = df.withColumn("__aval", M.parse_axis(args.aaxis).cast("double"))
-        value = F.col("__aval")
-        if args.amin is not None and args.amax is not None:
-            df = R.clip(df, value, args.amin, args.amax)
-    plots = []
-    names = []
-    for xs, ys, c in combos:
-        x, xname = _axis(xs, c)
-        y, yname = _axis(ys, c)
-        mirror = {xs.lower(), ys.lower()} == {"u", "v"} and not args.noconj
-        plots.append((x, y, mirror))
-        names.append((xname, yname))
-    fixed = {
-        k: getattr(args, k)
-        for k in ("xmin", "xmax", "ymin", "ymax")
-        if getattr(args, k) is not None
-    }
-    binned, ranges = R.grid_raster(
-        df, plots, args.xcanvas, args.ycanvas,
-        reduction=args.ared or "count", value=value,
-        robust=args.robust, fixed=fixed,
-    )
-    ms_name = os.path.basename(os.path.normpath(args.ms))
-    paths = {
-        i: os.path.join(args.dir, _template(args.png, ms=ms_name, xname=xname, yname=yname, field=""))
-        for i, (xname, yname) in enumerate(names)
-        if i in ranges  # a combo with no finite samples draws nothing
-    }
-    return _render(
-        args, binned, paths,
-        x_range=lambda i: ranges[i][:2], y_range=lambda i: ranges[i][2:],
-        title=ms_name, xlabel=lambda i: names[i][0], ylabel=lambda i: names[i][1],
-    )
-
-
 def _render(args, binned, path, x_range, y_range, title, xlabel, ylabel, categories=None) -> list[str]:
     """The one render call: every plot of ``binned`` (a per-plot
     argument may be a dict or function of the plot group, see
@@ -247,108 +205,87 @@ def _render(args, binned, path, x_range, y_range, title, xlabel, ylabel, categor
     return render_png(binned, path, args.xcanvas, args.ycanvas, **kw)
 
 
+def _categories(df, cat, plots, cnum: int):
+    """G7: the ``cnum`` most frequent values of ``cat`` among the rows
+    some plot draws (finite x and y), the rest as 'other'.  Returns the
+    category Column and the legend's category list."""
+    drawn = functools.reduce(operator.or_, [S.finite(x) & S.finite(y) for x, y, _ in plots])
+    top = [
+        r[0]
+        for r in df.filter(drawn).groupBy(cat.alias("c")).count()
+        .orderBy(F.desc("count"), "c").limit(cnum).collect()
+    ]
+    column = F.when(cat.isin(top), cat).otherwise(F.lit("other"))
+    return column, sorted(top) + (["other"] if len(top) >= cnum else [])
+
+
 def run(argv: list[str] | None = None, spark=None) -> list[str]:
-    """Parse, plan, execute; returns the list of PNG paths written."""
+    """Parse, plan, execute; returns the list of PNG paths written.
+
+    Every request is a grid of one or more (x, y, col) plots: one
+    extract, one sample table (raster.grid_samples), one bounds job
+    and one raster job for all of them."""
     args = build_parser().parse_args(argv)
     spark = spark or get_spark("shadems-cli")
     combos = _expand_combos(args)
-    if len(combos) > 1 and not (args.colour_by or args.iter or args.iter_field):
-        return _run_grid(args, combos, spark)
-    written: list[str] = []
-    for xs, ys, c in combos:
-        written += _run_single(args, xs, ys, c, spark)
-    return written
+    specs = [s for xs, ys, _ in combos for s in (xs, ys)] + ([args.aaxis] if args.aaxis else [])
+    df = _prepare(args, spark, specs)
 
-
-def _run_single(args, xaxis: str, yaxis: str, col: str, spark) -> list[str]:
-    """One (x, y, col) plot through the full single-plot pipeline
-    (colour axis, faceting, conjugate union) — the fallback when a
-    multi-axis grid combines with --colour-by/--iter, looped per
-    combo."""
-    df = _prepare(
-        args, spark,
-        [xaxis, yaxis] + ([args.aaxis] if args.aaxis else []),
-    )
-
-    # --- axes (B mappers) + hygiene (F8)
-    x, xname = _axis(xaxis, col)
-    y, yname = _axis(yaxis, col)
-    df = S.drop_nonfinite(df, x.cast("double"), y.cast("double"))
-
-    reduction = args.ared or "count"
-    value = None
+    cols = {}  # per-row columns every sample of the row carries
     if args.aaxis:
-        # materialized as a column so the conjugate-mirror union below
-        # can carry it alongside u/v (ADVICE r01: the mirror used to
-        # drop every non-uv column, breaking --ared/--colour-by/--iter)
-        df = df.withColumn("__aval", M.parse_axis(args.aaxis).cast("double"))
-        value = F.col("__aval")
-    if value is not None and args.amin is not None and args.amax is not None:
-        df = R.clip(df, value, args.amin, args.amax)
+        cols["av"] = M.parse_axis(args.aaxis).cast("double")
+        if args.amin is not None and args.amax is not None:
+            df = R.clip(df, cols["av"], args.amin, args.amax)
     facet = args.iter or ("field" if args.iter_field else None)
     if facet:
-        df = df.withColumn("__facet", _FACET_COLS[facet]().cast("string"))
-    category = None
+        cols["f"] = _FACET_COLS[facet]().cast("string")
+    plots, names = [], []
+    for xs, ys, c in combos:
+        (x, xname), (y, yname) = _axis(xs, c), _axis(ys, c)
+        mirror = {xs.lower(), ys.lower()} == {"u", "v"} and not args.noconj
+        plots.append((x.cast("double"), y.cast("double"), mirror))
+        names.append((xname, yname))
     categories = None
     if args.colour_by:
-        # G7: discover + cap categories, overflow -> 'other'
-        cat_col = F.col(args.colour_by).cast("string")
-        top = [
-            r[0]
-            for r in df.groupBy(cat_col.alias("c"))
-            .count()
-            .orderBy(F.desc("count"), "c")
-            .limit(args.cnum)
-            .collect()
-        ]
-        category = F.when(cat_col.isin(top), cat_col).otherwise(F.lit("other"))
-        categories = sorted(top) + (["other"] if len(top) >= args.cnum else [])
+        cols["cat"], categories = _categories(df, F.col(args.colour_by).cast("string"), plots, args.cnum)
 
-    # --- conjugate mirror (U2): uv-coverage symmetry unless --noconj.
-    # Applied after the value/facet columns are materialized so the
-    # union keeps every column later stages reference.
-    if {xaxis.lower(), yaxis.lower()} == {"u", "v"} and not args.noconj:
-        keep = []
-        if value is not None:
-            keep.append("__aval")
-        if args.colour_by:
-            keep.append(args.colour_by)
-        if facet:
-            keep.append("__facet")
-        keep = list(dict.fromkeys(keep))
-        fwd = [F.col("u"), F.col("v"), *[F.col(c) for c in keep]]
-        mir = [(-F.col("u")).alias("u"), (-F.col("v")).alias("v"), *[F.col(c) for c in keep]]
-        df = df.select(*fwd).unionAll(df.select(*mir))
-        x, y = F.col("u"), F.col("v")
-
+    samples = R.grid_samples(df, plots, cols)
     plot = ShadePlot(
-        x=x.cast("double"),
-        y=y.cast("double"),
-        width=args.xcanvas,
-        height=args.ycanvas,
-        x_range=(args.xmin, args.xmax) if args.xmin is not None and args.xmax is not None else None,
-        y_range=(args.ymin, args.ymax) if args.ymin is not None and args.ymax is not None else None,
-        reduction=reduction,
-        value=value,
-        category=category,
-        robust=args.robust,
+        x=F.col("xv"), y=F.col("yv"),
+        x_range=(args.xmin, args.xmax), y_range=(args.ymin, args.ymax), robust=args.robust,
+    )
+    ranges = plot.bounds(samples, plots=len(plots))
+    if not ranges:
+        raise ValueError("no sample survived the selection")
+    binned = R.grid_raster(
+        samples, ranges, args.xcanvas, args.ycanvas, reduction=args.ared or "count",
+        value=F.col("av") if args.aaxis else None, keys=tuple(k for k in ("f", "cat") if k in cols),
     )
 
     ms_name = os.path.basename(os.path.normpath(args.ms))
-    xr, yr = plot.bounds(df)
-    if not facet:
-        binned = plot.run_with_ranges(df, xr, yr)
-        path = os.path.join(args.dir, _template(args.png, ms=ms_name, xname=xname, yname=yname, field=""))
-        return _render(args, binned, path, xr, yr, ms_name, xname, yname, categories)
-    # one plan: the facet key (materialized above) rides the raster
-    # groupBy as the plot group; the renderer splits the collected table
-    binned = R.raster(
-        df, plot.x, plot.y, xr, yr, plot.width, plot.height,
-        reduction=reduction, value=value, category=F.col("__facet"),
-    ).withColumnRenamed("cat", "p")
+    if facet:
+        # the plot group of a facet is "p:key", split back on the driver
+        binned = binned.withColumn("p", F.concat_ws(":", F.col("p").cast("string"), "f")).drop("f")
 
-    def path(grp):
-        name = _template(args.png, ms=ms_name, xname=xname, yname=yname, field=f"_{grp}", group=f"_{grp}")
-        return os.path.join(args.dir, name)
+    def split(g) -> tuple[int, str]:
+        """Plot group -> (plot, facet key)."""
+        if not facet:
+            return g, ""
+        p, _, key = g.partition(":")
+        return int(p), key
 
-    return _render(args, binned, path, xr, yr, lambda grp: f"{ms_name} {grp}", xname, yname)
+    def path(g) -> str:
+        p, key = split(g)
+        xname, yname = names[p]
+        tag = f"_{key}" if facet else ""
+        return os.path.join(args.dir, _template(args.png, ms=ms_name, xname=xname, yname=yname, field=tag, group=tag))
+
+    return _render(
+        # a grid draws every plot with a range, also one with no pixel;
+        # facets draw each group present
+        args, binned, path if facet else {p: path(p) for p in sorted(ranges)},
+        x_range=lambda g: ranges[split(g)[0]][0], y_range=lambda g: ranges[split(g)[0]][1],
+        title=(lambda g: f"{ms_name} {split(g)[1]}") if facet else ms_name,
+        xlabel=lambda g: names[split(g)[0]][0], ylabel=lambda g: names[split(g)[0]][1],
+        categories=categories,
+    )

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from shadems_spark.operators.selection import drop_nonfinite
+
 #: reduction name -> aggregate builder over a value column (G2-G5).
 #: datashader's std is population std -> stddev_pop.
 REDUCTIONS = {
@@ -68,7 +70,8 @@ def clip(df: DataFrame, col: Column, lo: float, hi: float) -> DataFrame:
 
 def minmax(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
     """G6: the batched bounds pre-pass ([R] data_plots.py::
-    compute_bounds) — ONE job computing every unknown limit."""
+    compute_bounds) — ONE job computing every unknown limit.  A
+    grouped ``df`` (``df.groupBy(key)``) gives one row per group."""
     aggs = []
     for name, c in cols.items():
         aggs.append(F.min(c).alias(f"{name}_min"))
@@ -106,11 +109,11 @@ def raster(
     value: Column | None = None,
     category: Column | None = None,
 ) -> DataFrame:
-    """G1-G5: the canvas aggregation as a single groupBy plan.
+    """G1-G5: the canvas aggregation of one plot as a single groupBy
+    plan — the registry's raster operator (the CLI bins every plot
+    through :func:`grid_raster`).
 
-    Returns the binned table (bx, by[, cat], val) ordered by bin —
-    the engine's raster result; rendering is a thin driver-side
-    consumer (SURVEY.md §1.2 PNG-sink row).
+    Returns the binned table (bx, by[, cat], val) ordered by bin.
     """
     (xlo, xhi), (ylo, yhi) = x_range, y_range
     binned = (
@@ -125,32 +128,20 @@ def raster(
     return binned.groupBy(*keys).agg(agg).orderBy(*keys)
 
 
-def grid_raster(
+def grid_samples(
     df: DataFrame,
     combos: list[tuple[Column, Column, bool]],
-    width: int,
-    height: int,
-    reduction: str = "count",
-    value: Column | None = None,
-    robust: bool = False,
-    fixed: dict[str, float] | None = None,
-):
-    """Multi-plot grid as ONE extract ([R] main.py axis-list loop,
-    SURVEY.md §4 axis-dedup): N (x, y) axis pairs rasterized from a
-    SINGLE scan of the input.
+    cols: dict[str, Column] | None = None,
+) -> DataFrame:
+    """The sample table of a grid of N plots ([R] main.py axis-list
+    loop, SURVEY.md §4 axis-dedup): each row explodes into one
+    (p, xv, yv) sample per plot p, so N plots read ONE scan.
 
     Each combo is (x Column, y Column, mirror) — ``mirror=True`` adds
     the conjugate (-x, -y) sample per row (the u/v symmetry fill), as
     an extra array element rather than a union, so the mirror costs no
-    second scan either.  The per-row projection explodes into
-    (p, xv, yv) samples; bounds come back from one N-row aggregate
-    (driver-bounded: one row per plot), and the binning pass indexes
-    per-combo ranges out of literal arrays — so the raster job's plan
-    contains exactly ONE scan of the source regardless of grid size,
-    and the shuffle stays ≤ N·W·H keys by construction.
-
-    Returns (binned, ranges): ``binned`` has (p, by, bx, val) and
-    ``ranges[p] = (xlo, xhi, ylo, yhi)``.
+    second scan either.  ``cols`` ({name: Column}) ride along with
+    every sample of their row; non-finite samples are dropped (F8).
     """
     elems = []
     for i, (x, y, mirror) in enumerate(combos):
@@ -165,53 +156,47 @@ def grid_raster(
                     (-xd).alias("xv"), (-yd).alias("yv"),
                 )
             )
-    cols = [F.explode(F.array(*elems)).alias("e")]
-    if value is not None:
-        cols.append(value.cast("double").alias("av"))
-    pts = df.select(*cols).select(
-        "e.*", *(["av"] if value is not None else [])
-    )
-    finite = pts.filter(
-        ~F.isnan("xv") & ~F.isnan("yv")
-        & F.col("xv").isNotNull() & F.col("yv").isNotNull()
-    )
-    fixed = fixed or {}
-    if robust:
-        bounds = finite.groupBy("p").agg(
-            F.percentile_approx("xv", 0.02, 10000).alias("xlo"),
-            F.percentile_approx("xv", 0.98, 10000).alias("xhi"),
-            F.percentile_approx("yv", 0.02, 10000).alias("ylo"),
-            F.percentile_approx("yv", 0.98, 10000).alias("yhi"),
-        )
-    else:
-        bounds = finite.groupBy("p").agg(
-            F.min("xv").alias("xlo"), F.max("xv").alias("xhi"),
-            F.min("yv").alias("ylo"), F.max("yv").alias("yhi"),
-        )
-    ranges: dict[int, tuple[float, float, float, float]] = {}
-    for r in bounds.collect():
-        ranges[int(r["p"])] = (
-            fixed.get("xmin", r["xlo"]), fixed.get("xmax", r["xhi"]),
-            fixed.get("ymin", r["ylo"]), fixed.get("ymax", r["yhi"]),
-        )
-    n = len(combos)
+    cols = cols or {}
+    pts = df.select(F.explode(F.array(*elems)).alias("e"), *(c.alias(n) for n, c in cols.items()))
+    return drop_nonfinite(pts.select("e.*", *cols), F.col("xv"), F.col("yv"))
 
-    def lits(idx: int) -> Column:
-        # per-combo range literals indexed by p (combos with no finite
-        # samples bin nothing: their filter below keeps zero rows)
+
+def grid_raster(
+    samples: DataFrame,
+    ranges: dict[int, tuple[tuple[float, float], tuple[float, float]]],
+    width: int,
+    height: int,
+    reduction: str = "count",
+    value: Column | None = None,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """The canvas aggregation of every plot of a :func:`grid_samples`
+    table as ONE groupBy: each sample bins against its plot's
+    ``ranges[p] = ((xlo, xhi), (ylo, yhi))``, indexed out of literal
+    arrays, so the plan scans the source once whatever the grid size
+    and the shuffle stays ≤ N·W·H·|keys| rows.  ``ranges`` holds
+    every plot that has a sample (``ShadePlot.bounds``); a plot without
+    one needs no range.
+
+    Returns the binned table (p, *keys, by, bx, val), unordered: its
+    consumer splits it by plot on the driver.
+    """
+    n = max(ranges, default=-1) + 1
+
+    def lits(axis: int, end: int) -> Column:
         return F.element_at(
             F.array(*[
-                F.lit(float(ranges.get(i, (0.0, 0.0, 0.0, 0.0))[idx]))
+                F.lit(float(ranges[i][axis][end]) if i in ranges else 0.0)
                 for i in range(n)
             ]),
             F.col("p") + 1,
         )
 
-    xlo, xhi, ylo, yhi = lits(0), lits(1), lits(2), lits(3)
+    (xlo, xhi), (ylo, yhi) = (lits(0, 0), lits(0, 1)), (lits(1, 0), lits(1, 1))
     xspan = F.when(xhi > xlo, xhi - xlo).otherwise(F.lit(1.0))
     yspan = F.when(yhi > ylo, yhi - ylo).otherwise(F.lit(1.0))
     binned = (
-        finite.filter(
+        samples.filter(
             F.col("xv").between(xlo, xhi) & F.col("yv").between(ylo, yhi)
         )
         .withColumn(
@@ -229,8 +214,4 @@ def grid_raster(
             ),
         )
     )
-    agg = REDUCTIONS[reduction](F.col("av") if value is not None else None)
-    return (
-        binned.groupBy("p", "by", "bx").agg(agg.alias("val")),
-        ranges,
-    )
+    return binned.groupBy("p", *keys, "by", "bx").agg(REDUCTIONS[reduction](value).alias("val"))

@@ -59,10 +59,15 @@ def apply_flags(
     return df.filter(~(F.col(flag) | F.col(flag_row)))
 
 
+def finite(c: Column) -> Column:
+    """True where ``c`` is neither null nor NaN."""
+    return c.isNotNull() & ~F.isnan(c)
+
+
 def drop_nonfinite(df: DataFrame, *cols: Column) -> DataFrame:
     """F8: NaN/null hygiene — non-finite derived values never reach
     the raster (datashader skips them)."""
     out = df
     for c in cols:
-        out = out.filter(c.isNotNull() & ~F.isnan(c))
+        out = out.filter(finite(c))
     return out

@@ -3,7 +3,10 @@
 Mirrors [R] shade_ms/main.py + data_plots.py (SURVEY.md §3.1): axis
 registration -> selection -> (job 1) batched min/max bounds pass when
 limits are unset ([R] compute_bounds) -> (job 2) binned canvas
-aggregation ([R] create_plot) -> ordered binned table.  The binned
+aggregation ([R] create_plot).  :meth:`ShadePlot.run` and
+:meth:`ShadePlot.run_faceted` bin with the registry operator
+``raster.raster``; the CLI uses :meth:`ShadePlot.bounds` alone, over a
+grid sample table that ``raster.grid_raster`` then bins.  The binned
 result (≤ W·H·ncat rows) is what a renderer consumes; collecting it
 to the driver is the PNG-sink analogue and is cheap by construction.
 """
@@ -31,8 +34,9 @@ class ShadePlot:
     y: Column
     width: int = 256
     height: int = 256
-    x_range: tuple[float, float] | None = None
-    y_range: tuple[float, float] | None = None
+    #: (lo, hi); a None end (or range) comes from the bounds job
+    x_range: tuple[float | None, float | None] | None = None
+    y_range: tuple[float | None, float | None] | None = None
     reduction: str = "count"
     value: Column | None = None
     category: Column | None = None
@@ -41,17 +45,31 @@ class ShadePlot:
     robust: bool = False
     _bounds: dict = field(default_factory=dict, repr=False)
 
-    def bounds(self, df: DataFrame) -> tuple[tuple[float, float], tuple[float, float]]:
-        """Job 1 — only runs if a range is unset; both axes batched
-        into one aggregate ([R] compute_bounds batches all unknown
-        limits into a single dask compute)."""
-        if self.x_range is not None and self.y_range is not None:
-            return self.x_range, self.y_range
+    def bounds(self, df: DataFrame, plots: int | None = None):
+        """Job 1 — only runs if a limit is unset; every unset limit is
+        batched into one aggregate ([R] compute_bounds batches all
+        unknown limits into a single dask compute).  Returns
+        ((xlo, xhi), (ylo, yhi)).
+
+        With ``plots``, ``df`` is a grid sample table of that many
+        plots (``raster.grid_samples``) and the one job groups by its
+        plot column: returns {p: ranges} for every plot with a sample,
+        or for every plot when every limit is given and no job runs."""
+        lim = (*(self.x_range or (None, None)), *(self.y_range or (None, None)))
+        if None not in lim:
+            ranges = (lim[:2], lim[2:])
+            return ranges if plots is None else dict.fromkeys(range(plots), ranges)
+
+        def resolve(row):
+            got = [row[f"{a}_{end}"] for a in "xy" for end in ("min", "max")]
+            xlo, xhi, ylo, yhi = (float(g) if v is None else v for v, g in zip(lim, got))
+            return (xlo, xhi), (ylo, yhi)
+
         pass_fn = R.robust_bounds if self.robust else R.minmax
-        row = pass_fn(df, {"x": self.x, "y": self.y}).first()
-        xr = self.x_range or (float(row["x_min"]), float(row["x_max"]))
-        yr = self.y_range or (float(row["y_min"]), float(row["y_max"]))
-        return xr, yr
+        cols = {"x": self.x, "y": self.y}
+        if plots is None:
+            return resolve(pass_fn(df, cols).first())
+        return {r["p"]: resolve(r) for r in pass_fn(df.groupBy("p"), cols).collect()}
 
     def run(self, df: DataFrame) -> DataFrame:
         """Job 2 — the canvas aggregation; returns the binned table."""
@@ -69,13 +87,6 @@ class ShadePlot:
             category=self.category,
         )
 
-    def run_with_ranges(self, df: DataFrame, xr, yr) -> DataFrame:
-        """Job 2 with externally-supplied bounds (see run_plots)."""
-        return R.raster(
-            df, self.x, self.y, xr, yr, self.width, self.height,
-            reduction=self.reduction, value=self.value, category=self.category,
-        )
-
     def run_faceted(self, df: DataFrame, facet_keys: list[str], out_path: str) -> None:
         """A7/iteration (--iter-field/--iter-scan...): ONE plan whose
         groupBy includes the facet keys, written partitioned — the
@@ -90,31 +101,3 @@ class ShadePlot:
             .agg(R.REDUCTIONS[self.reduction](self.value).alias("val"))
         )
         binned.write.mode("overwrite").partitionBy(*facet_keys).parquet(out_path)
-
-
-def run_plots(df: DataFrame, plots: list[ShadePlot], cache: bool = True) -> list[DataFrame]:
-    """Render several plots of ONE data extract with ONE bounds job.
-
-    The reference batches every unset axis limit of every requested
-    plot into a single dask compute ([R] shade_ms/data_plots.py::
-    compute_bounds) and shares the extracted dataframe across plots
-    (axis dedup, [R] DataAxis.register).  Spark equivalent: union all
-    unknown (plot, axis) ranges into one agg job over the (optionally
-    cached) extract, then instantiate each raster with its resolved
-    ranges — N plots cost 1 bounds scan + N small agg jobs, not 2N
-    scans."""
-    needed: dict[str, object] = {}
-    for i, p in enumerate(plots):
-        if p.x_range is None:
-            needed[f"p{i}x"] = p.x
-        if p.y_range is None:
-            needed[f"p{i}y"] = p.y
-    if cache and needed:
-        df = df.persist()
-    row = R.minmax(df, needed).first() if needed else None
-    out = []
-    for i, p in enumerate(plots):
-        xr = p.x_range or (float(row[f"p{i}x_min"]), float(row[f"p{i}x_max"]))
-        yr = p.y_range or (float(row[f"p{i}y_min"]), float(row[f"p{i}y_max"]))
-        out.append(p.run_with_ranges(df, xr, yr))
-    return out

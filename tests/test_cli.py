@@ -475,6 +475,7 @@ def test_cli_multiplot_grid_one_scan(tmp_path, spark, sf_dir):
     from shadems_spark.operators import mappers as M
     from shadems_spark.operators import raster as R
     from shadems_spark.operators import selection as S
+    from shadems_spark.plans.shadeplot import ShadePlot
     from shadems_spark.vis import vis_view
 
     paths = cli.run(
@@ -502,7 +503,9 @@ def test_cli_multiplot_grid_one_scan(tmp_path, spark, sf_dir):
         (M.parse_axis("uvdist"), M.parse_axis("DATA:amp"), False),
         (M.parse_axis("uvdist"), M.parse_axis("DATA:phase"), False),
     ]
-    binned, ranges = R.grid_raster(df, combos, 16, 16)
+    samples = R.grid_samples(df, combos)
+    ranges = ShadePlot(x=F.col("xv"), y=F.col("yv")).bounds(samples, plots=4)
+    binned = R.grid_raster(samples, ranges, 16, 16)
     assert len(ranges) == 4
     plan = binned._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
@@ -522,8 +525,8 @@ def test_cli_multiplot_col_list_dedup(tmp_path, spark, sf_dir):
 def test_cli_multiplot_with_colour_falls_back_per_combo(
     tmp_path, spark, sf_dir
 ):
-    """Grid + --colour-by runs the full single-plot path per combo
-    (colour discovery is per-plot state) — still every combination."""
+    """A grid with --colour-by writes one categorical PNG per
+    combination."""
     paths = cli.run(
         [
             sf_dir, "-x", "time,uvdist", "-y", "amp",
@@ -533,7 +536,7 @@ def test_cli_multiplot_with_colour_falls_back_per_combo(
         ],
         spark=spark,
     )
-    assert len(paths) == 2
+    assert {p.rsplit("/", 1)[-1] for p in paths} == {"time_amp.png", "uvdist_amp.png"}
 
 
 def test_cli_constant_raster_norms(tmp_path, spark, sf_dir):
@@ -574,7 +577,9 @@ def test_cli_constant_axis_single_plot(tmp_path, spark, sf_dir):
 def test_cli_spark_jobs_per_run(tmp_path, spark, sf_dir):
     """Facets, dynspread and a multi-plot grid are split, spread and
     shaded on the driver from the one collected raster: none of them
-    starts more Spark jobs than the same single plot."""
+    starts more Spark jobs than the same single plot, also when a grid
+    adds a colour axis or facets.  With every limit given, no bounds
+    job runs."""
     sc = spark.sparkContext
     base = [sf_dir, "-y", "amp", "--xcanvas", "16", "--ycanvas", "16", "--dir", str(tmp_path)]
     ids = itertools.count()
@@ -594,3 +599,78 @@ def test_cli_spark_jobs_per_run(tmp_path, spark, sf_dir):
     assert jobs("-x", "time", "--iter", "corr") <= single
     assert jobs("-x", "time", "--dynspread") <= single
     assert jobs("-x", "time,uvdist") <= single
+    assert jobs("-x", "time,uvdist", "-C", "corr_label") <= jobs("-x", "time", "-C", "corr_label")
+    assert jobs("-x", "time,uvdist", "--iter", "corr") <= jobs("-x", "time", "--iter", "corr")
+    limits = ["--xmin", "2000", "--xmax", "2400", "--ymin", "0", "--ymax", "50000"]
+    assert jobs("-x", "time", *limits) < single
+
+
+def test_cli_single_plot_raster_plan(tmp_path, spark, sf_dir, monkeypatch):
+    """A single u/v plot bins its conjugate mirror from ONE scan of the
+    source, and its raster plan has no sort: plain, with a colour axis
+    and with facets."""
+    import re
+
+    from shadems_spark.operators import raster as R
+
+    grid_raster = R.grid_raster
+    plans = []
+
+    def capture(*a, **k):
+        # the plan as returned, before the renderer's collect runs it
+        binned = grid_raster(*a, **k)
+        plans.append(binned._jdf.queryExecution().executedPlan().toString())
+        return binned
+
+    monkeypatch.setattr(R, "grid_raster", capture)
+    for extra in ([], ["-C", "corr_label"], ["--iter", "field"]):
+        cli.run(
+            [sf_dir, "-x", "u", "-y", "v", *extra, "--xcanvas", "16", "--ycanvas", "16",
+             "--dir", str(tmp_path), "--png", "uv{group}.png"],
+            spark=spark,
+        )
+        plan = plans.pop()
+        assert plan.count("Scan parquet") == 1, extra
+        assert not re.search(r"\bSort\b", plan), extra
+
+
+def test_cli_empty_selection(tmp_path, spark, sf_dir):
+    """A request none of whose plots has a sample raises ValueError,
+    for a single plot as for a grid, and writes nothing."""
+    import pytest
+
+    for x in ("time", "time,uvdist"):
+        with pytest.raises(ValueError, match="no sample survived the selection"):
+            cli.run(
+                [sf_dir, "-x", x, "-y", "amp", "--field", "NOPE", "--dir", str(tmp_path)],
+                spark=spark,
+            )
+    assert not list(tmp_path.iterdir())
+
+
+def test_cli_lone_limit(tmp_path, spark, sf_dir):
+    """One limit on its own (--xmin) applies to a single plot as it
+    does to the same plot of a grid: the PNGs are byte-identical."""
+    argv = [sf_dir, "-y", "amp", "--xmin", "2000", "--xcanvas", "16", "--ycanvas", "16", "--dir", str(tmp_path)]
+    [single] = cli.run(argv + ["-x", "time", "--png", "single.png"], spark=spark)
+    grid = cli.run(argv + ["-x", "time,uvdist", "--png", "{xname}_{yname}.png"], spark=spark)
+    [time_amp] = [p for p in grid if p.endswith("/time_amp.png")]
+    assert open(single, "rb").read() == open(time_amp, "rb").read()
+
+
+def test_grid_bounds_skip_plots_without_samples(spark):
+    """ShadePlot.bounds over a grid sample table: one range per plot
+    that has a finite sample, each limit given on its own overriding
+    only its end; the plot without a sample bins nothing."""
+    from pyspark.sql import functions as F
+
+    from shadems_spark.operators import raster as R
+    from shadems_spark.plans.shadeplot import ShadePlot
+
+    df = spark.createDataFrame([(1.0, 10.0), (3.0, 30.0)], "a double, b double")
+    combos = [(F.col("a"), F.col("b"), False), (F.col("a"), F.lit(float("nan")), False)]
+    samples = R.grid_samples(df, combos)
+    ranges = ShadePlot(x=F.col("xv"), y=F.col("yv"), x_range=(0.0, None)).bounds(samples, plots=2)
+    assert ranges == {0: ((0.0, 3.0), (10.0, 30.0))}
+    binned = R.grid_raster(samples, ranges, 4, 4).collect()
+    assert sorted((r["p"], r["bx"], r["by"], r["val"]) for r in binned) == [(0, 1, 0, 1), (0, 3, 3, 1)]

@@ -102,28 +102,6 @@ def test_minhash_joins_on_longs(spark):
     assert "InMemoryTableScan" in p  # signature table persisted once
 
 
-def test_run_plots_single_bounds_job(spark, sf_dir, monkeypatch):
-    """N plots of one extract must resolve ALL unknown ranges in ONE
-    minmax job ([R] compute_bounds batching) and match per-plot runs."""
-    from shadems_spark.catalog import load_table
-    from shadems_spark.operators import raster as R
-    from shadems_spark.plans import shadeplot as SP
-    from shadems_spark.vis import vis_view
-
-    v = vis_view(load_table(spark, sf_dir, "lineitem"))
-    mk = lambda: [
-        SP.ShadePlot(x=F.col("time_day").cast("double"), y=F.col("vis.re"), width=16, height=16),
-        SP.ShadePlot(x=F.col("u"), y=F.col("w"), width=8, height=8),
-    ]
-    calls = []
-    orig = R.minmax
-    monkeypatch.setattr(R, "minmax", lambda df, cols: calls.append(len(cols)) or orig(df, cols))
-    batched = [sorted(map(tuple, b.collect())) for b in SP.run_plots(v, mk(), cache=False)]
-    assert calls == [4]  # one job, both plots' two axes each
-    singles = [sorted(map(tuple, p.run(v).collect())) for p in mk()]
-    assert batched == singles
-
-
 def test_robust_bounds_shrink(spark):
     """Quantile bounds must lie within min/max and survive a single
     outlier that would wreck the linear canvas."""
