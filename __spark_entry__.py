@@ -30,7 +30,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
     SURVEY.md §7 minimum end-to-end slice: lineitem scan -> visibility
     view (derived complex columns) -> batched min/max bounds job ->
-    256x256 binned count raster -> ordered binned table.
+    256x256 binned count raster, binned on the CLI's grid path -> the
+    binned table (by, bx, val), unordered.
     """
     from shadems_spark.queries.core import flagship
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import argparse
 import functools
+import math
 import operator
 import os
 
@@ -219,6 +220,16 @@ def _categories(df, cat, plots, cnum: int):
     return column, sorted(top) + (["other"] if len(top) >= cnum else [])
 
 
+def _check(args) -> None:
+    """Reject requests no canvas can draw, naming the flag, before any
+    Spark job runs."""
+    for flag in ("xcanvas", "ycanvas", "cnum"):
+        if getattr(args, flag) < 1:
+            raise ValueError(f"--{flag} must be at least 1, got {getattr(args, flag)}")
+    if args.ared not in (None, "count") and not args.aaxis:
+        raise ValueError(f"--ared {args.ared} needs an aggregation axis (-a/--aaxis)")
+
+
 def run(argv: list[str] | None = None, spark=None) -> list[str]:
     """Parse, plan, execute; returns the list of PNG paths written.
 
@@ -226,6 +237,7 @@ def run(argv: list[str] | None = None, spark=None) -> list[str]:
     extract, one sample table (raster.grid_samples), one bounds job
     and one raster job for all of them."""
     args = build_parser().parse_args(argv)
+    _check(args)
     spark = spark or get_spark("shadems-cli")
     combos = _expand_combos(args)
     specs = [s for xs, ys, _ in combos for s in (xs, ys)] + ([args.aaxis] if args.aaxis else [])
@@ -234,8 +246,10 @@ def run(argv: list[str] | None = None, spark=None) -> list[str]:
     cols = {}  # per-row columns every sample of the row carries
     if args.aaxis:
         cols["av"] = M.parse_axis(args.aaxis).cast("double")
-        if args.amin is not None and args.amax is not None:
-            df = R.clip(df, cols["av"], args.amin, args.amax)
+        # each given end clips on its own, like the axis limits
+        if args.amin is not None or args.amax is not None:
+            lo = -math.inf if args.amin is None else args.amin
+            df = R.clip(df, cols["av"], lo, math.inf if args.amax is None else args.amax)
     facet = args.iter or ("field" if args.iter_field else None)
     if facet:
         cols["f"] = _FACET_COLS[facet]().cast("string")
@@ -250,10 +264,7 @@ def run(argv: list[str] | None = None, spark=None) -> list[str]:
         cols["cat"], categories = _categories(df, F.col(args.colour_by).cast("string"), plots, args.cnum)
 
     samples = R.grid_samples(df, plots, cols)
-    plot = ShadePlot(
-        x=F.col("xv"), y=F.col("yv"),
-        x_range=(args.xmin, args.xmax), y_range=(args.ymin, args.ymax), robust=args.robust,
-    )
+    plot = ShadePlot(x_range=(args.xmin, args.xmax), y_range=(args.ymin, args.ymax), robust=args.robust)
     ranges = plot.bounds(samples, plots=len(plots))
     if not ranges:
         raise ValueError("no sample survived the selection")

@@ -15,6 +15,11 @@ risks): half-open bins, out-of-range rows dropped, the max value
 clamped into the last bin:
 
     bx = least(W-1, floor((x - lo) / (hi - lo) * W))   for lo<=x<=hi
+
+:func:`bin_axis` is that formula's one Spark spelling
+(:func:`bin_axis_sql` its DuckDB twin), and :func:`grid_raster` the one
+binning plan: the CLI's grids, the registry's :func:`raster` and
+``ShadePlot``'s plots and facet writes are all grid sample tables.
 """
 
 from __future__ import annotations
@@ -43,14 +48,15 @@ REDUCTIONS = {
 }
 
 
-def bin_axis(col: Column, lo: float, hi: float, n: int) -> Column:
-    """G1: pixel index of ``col`` on an n-bin axis over [lo, hi].  A
-    zero-width axis (a constant column, hi <= lo) bins every row to 0,
-    like :func:`grid_raster`; deciding it from the literals keeps every
-    other plan unchanged."""
-    if hi <= lo:
-        return F.lit(0).cast("long")
-    return F.least(F.lit(n - 1).cast("long"), F.floor((col - lo) / (hi - lo) * n))
+def bin_axis(col: Column, lo: float | Column, hi: float | Column, n: int) -> Column:
+    """G1: pixel index of ``col`` on an n-bin axis over [lo, hi] — the
+    one bin expression of every Spark raster.  Bounds are literals or
+    Columns (:func:`grid_raster`'s per-plot ranges).  A zero-width axis
+    (a constant column, hi <= lo) divides by 1, so its rows, clipped to
+    [lo, hi] first, all bin to 0."""
+    lo, hi = F.lit(lo), F.lit(hi)
+    span = F.when(hi > lo, hi - lo).otherwise(F.lit(1.0))
+    return F.least(F.lit(n - 1).cast("long"), F.floor((col - lo) / span * n))
 
 
 def bin_axis_sql(expr: str, lo: float, hi: float, n: int) -> str:
@@ -109,23 +115,21 @@ def raster(
     value: Column | None = None,
     category: Column | None = None,
 ) -> DataFrame:
-    """G1-G5: the canvas aggregation of one plot as a single groupBy
-    plan — the registry's raster operator (the CLI bins every plot
-    through :func:`grid_raster`).
+    """G1-G5: the canvas aggregation of one plot with fixed ranges —
+    the registry's raster operator, binned as a one-plot
+    :func:`grid_raster`, so it shares the CLI's plan.
 
-    Returns the binned table (bx, by[, cat], val) ordered by bin.
+    Returns the binned table (by, bx[, cat], val), unordered.
     """
-    (xlo, xhi), (ylo, yhi) = x_range, y_range
-    binned = (
-        clip(clip(df, x, xlo, xhi), y, ylo, yhi)
-        .withColumn("bx", bin_axis(x, xlo, xhi, width))
-        .withColumn("by", bin_axis(y, ylo, yhi, height))
-    )
-    keys = ["by", "bx"] + (["cat"] if category is not None else [])
+    cols = {"av": value} if value is not None else {}
+    keys = ("cat",) if category is not None else ()
     if category is not None:
-        binned = binned.withColumn("cat", category)
-    agg = REDUCTIONS[reduction](value).alias("val")
-    return binned.groupBy(*keys).agg(agg).orderBy(*keys)
+        cols["cat"] = category
+    samples = grid_samples(df, [(x, y, False)], cols)
+    return grid_raster(
+        samples, {0: (x_range, y_range)}, width, height, reduction=reduction,
+        value=F.col("av") if value is not None else None, keys=keys,
+    ).select("by", "bx", *keys, "val")
 
 
 def grid_samples(
@@ -193,25 +197,11 @@ def grid_raster(
         )
 
     (xlo, xhi), (ylo, yhi) = (lits(0, 0), lits(0, 1)), (lits(1, 0), lits(1, 1))
-    xspan = F.when(xhi > xlo, xhi - xlo).otherwise(F.lit(1.0))
-    yspan = F.when(yhi > ylo, yhi - ylo).otherwise(F.lit(1.0))
     binned = (
         samples.filter(
             F.col("xv").between(xlo, xhi) & F.col("yv").between(ylo, yhi)
         )
-        .withColumn(
-            "bx",
-            F.least(
-                F.lit(width - 1).cast("long"),
-                F.floor((F.col("xv") - xlo) / xspan * width),
-            ),
-        )
-        .withColumn(
-            "by",
-            F.least(
-                F.lit(height - 1).cast("long"),
-                F.floor((F.col("yv") - ylo) / yspan * height),
-            ),
-        )
+        .withColumn("bx", bin_axis(F.col("xv"), xlo, xhi, width))
+        .withColumn("by", bin_axis(F.col("yv"), ylo, yhi, height))
     )
     return binned.groupBy("p", *keys, "by", "bx").agg(REDUCTIONS[reduction](value).alias("val"))

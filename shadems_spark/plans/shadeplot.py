@@ -3,17 +3,18 @@
 Mirrors [R] shade_ms/main.py + data_plots.py (SURVEY.md §3.1): axis
 registration -> selection -> (job 1) batched min/max bounds pass when
 limits are unset ([R] compute_bounds) -> (job 2) binned canvas
-aggregation ([R] create_plot).  :meth:`ShadePlot.run` and
-:meth:`ShadePlot.run_faceted` bin with the registry operator
-``raster.raster``; the CLI uses :meth:`ShadePlot.bounds` alone, over a
-grid sample table that ``raster.grid_raster`` then bins.  The binned
-result (≤ W·H·ncat rows) is what a renderer consumes; collecting it
-to the driver is the PNG-sink analogue and is cheap by construction.
+aggregation ([R] create_plot).  Every plot is a grid sample table
+(``raster.grid_samples``) that :meth:`ShadePlot.bounds` bounds and
+``raster.grid_raster`` bins: :meth:`ShadePlot.run` and
+:meth:`ShadePlot.run_faceted` as a one-plot grid, the CLI as a grid of
+its combos.  The binned result (≤ W·H·ncat rows) is what a renderer
+consumes; collecting it to the driver is the PNG-sink analogue and is
+cheap by construction.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -23,42 +24,37 @@ from shadems_spark.operators import raster as R
 
 @dataclass
 class ShadePlot:
-    """One plot spec = one logical query (axes, ranges, reduction).
+    """One plot spec = one logical query (axes, ranges, canvas).
 
-    ``x``/``y`` are arbitrary Column expressions (the DataMapper
-    output, SURVEY.md §2 B); ``category`` is the --colour-by axis;
-    ``reduction``/``value`` the --ared/--aaxis pair.
+    ``x``/``y`` are arbitrary Column expressions over the source rows
+    (the DataMapper output, SURVEY.md §2 B), sampled by :meth:`run`;
+    :meth:`bounds` alone reads a sample table and needs neither.
     """
 
-    x: Column
-    y: Column
+    x: Column | None = None
+    y: Column | None = None
     width: int = 256
     height: int = 256
     #: (lo, hi); a None end (or range) comes from the bounds job
     x_range: tuple[float | None, float | None] | None = None
     y_range: tuple[float | None, float | None] | None = None
-    reduction: str = "count"
-    value: Column | None = None
-    category: Column | None = None
     #: robust=True: bounds from 2%/98% quantile sketches instead of
     #: min/max — outlier samples can't stretch the canvas (§4 ext).
     robust: bool = False
-    _bounds: dict = field(default_factory=dict, repr=False)
 
-    def bounds(self, df: DataFrame, plots: int | None = None):
-        """Job 1 — only runs if a limit is unset; every unset limit is
-        batched into one aggregate ([R] compute_bounds batches all
-        unknown limits into a single dask compute).  Returns
-        ((xlo, xhi), (ylo, yhi)).
+    def bounds(self, df: DataFrame, plots: int):
+        """Job 1 — only runs if a limit is unset; every unset limit of
+        every plot is batched into one aggregate ([R] compute_bounds
+        batches all unknown limits into a single dask compute), grouped
+        by the plot column of ``df``, a grid sample table of ``plots``
+        plots (``raster.grid_samples``).
 
-        With ``plots``, ``df`` is a grid sample table of that many
-        plots (``raster.grid_samples``) and the one job groups by its
-        plot column: returns {p: ranges} for every plot with a sample,
-        or for every plot when every limit is given and no job runs."""
+        Returns {p: ((xlo, xhi), (ylo, yhi))} for every plot with a
+        sample, or for every plot when every limit is given and no job
+        runs."""
         lim = (*(self.x_range or (None, None)), *(self.y_range or (None, None)))
         if None not in lim:
-            ranges = (lim[:2], lim[2:])
-            return ranges if plots is None else dict.fromkeys(range(plots), ranges)
+            return dict.fromkeys(range(plots), (lim[:2], lim[2:]))
 
         def resolve(row):
             got = [row[f"{a}_{end}"] for a in "xy" for end in ("min", "max")]
@@ -66,38 +62,20 @@ class ShadePlot:
             return (xlo, xhi), (ylo, yhi)
 
         pass_fn = R.robust_bounds if self.robust else R.minmax
-        cols = {"x": self.x, "y": self.y}
-        if plots is None:
-            return resolve(pass_fn(df, cols).first())
+        cols = {"x": F.col("xv"), "y": F.col("yv")}
         return {r["p"]: resolve(r) for r in pass_fn(df.groupBy("p"), cols).collect()}
 
-    def run(self, df: DataFrame) -> DataFrame:
-        """Job 2 — the canvas aggregation; returns the binned table."""
-        xr, yr = self.bounds(df)
-        return R.raster(
-            df,
-            self.x,
-            self.y,
-            xr,
-            yr,
-            self.width,
-            self.height,
-            reduction=self.reduction,
-            value=self.value,
-            category=self.category,
-        )
+    def run(self, df: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
+        """Job 2 — the count raster of (x, y) as a one-plot grid, with
+        the columns ``keys`` of ``df`` in its groupBy; returns the
+        binned table (*keys, by, bx, val), unordered."""
+        samples = R.grid_samples(df, [(self.x, self.y, False)], {k: F.col(k) for k in keys})
+        ranges = self.bounds(samples, plots=1)
+        return R.grid_raster(samples, ranges, self.width, self.height, keys=keys).drop("p")
 
     def run_faceted(self, df: DataFrame, facet_keys: list[str], out_path: str) -> None:
         """A7/iteration (--iter-field/--iter-scan...): ONE plan whose
         groupBy includes the facet keys, written partitioned — the
         one-PNG-per-group loop without per-group jobs (scales to any
         number of facets in a single shuffle)."""
-        xr, yr = self.bounds(df)
-        binned = (
-            R.clip(R.clip(df, self.x, *xr), self.y, *yr)
-            .withColumn("bx", R.bin_axis(self.x, xr[0], xr[1], self.width))
-            .withColumn("by", R.bin_axis(self.y, yr[0], yr[1], self.height))
-            .groupBy(*facet_keys, "by", "bx")
-            .agg(R.REDUCTIONS[self.reduction](self.value).alias("val"))
-        )
-        binned.write.mode("overwrite").partitionBy(*facet_keys).parquet(out_path)
+        self.run(df, tuple(facet_keys)).write.mode("overwrite").partitionBy(*facet_keys).parquet(out_path)

@@ -9,6 +9,7 @@ import struct
 import zlib
 
 import numpy as np
+import pytest
 
 from shadems_spark import cli
 from shadems_spark.render import lut, raster_to_rgba, write_png
@@ -504,7 +505,7 @@ def test_cli_multiplot_grid_one_scan(tmp_path, spark, sf_dir):
         (M.parse_axis("uvdist"), M.parse_axis("DATA:phase"), False),
     ]
     samples = R.grid_samples(df, combos)
-    ranges = ShadePlot(x=F.col("xv"), y=F.col("yv")).bounds(samples, plots=4)
+    ranges = ShadePlot().bounds(samples, plots=4)
     binned = R.grid_raster(samples, ranges, 16, 16)
     assert len(ranges) == 4
     plan = binned._jdf.queryExecution().executedPlan().toString()
@@ -637,8 +638,6 @@ def test_cli_single_plot_raster_plan(tmp_path, spark, sf_dir, monkeypatch):
 def test_cli_empty_selection(tmp_path, spark, sf_dir):
     """A request none of whose plots has a sample raises ValueError,
     for a single plot as for a grid, and writes nothing."""
-    import pytest
-
     for x in ("time", "time,uvdist"):
         with pytest.raises(ValueError, match="no sample survived the selection"):
             cli.run(
@@ -658,6 +657,52 @@ def test_cli_lone_limit(tmp_path, spark, sf_dir):
     assert open(single, "rb").read() == open(time_amp, "rb").read()
 
 
+def test_cli_lone_agg_limit(tmp_path, spark, sf_dir):
+    """--amin and --amax each clip the aggregation axis on their own: a
+    lone end draws what that end with an open other end draws, and a
+    lone --amin above every value leaves no sample."""
+    argv = [
+        sf_dir, "-x", "time", "-y", "amp", "--ared", "max", "-a", "DATA:real",
+        "--xcanvas", "16", "--ycanvas", "16", "--dir", str(tmp_path),
+    ]
+
+    def png(name, *limits):
+        [p] = cli.run(argv + ["--png", name, *limits], spark=spark)
+        return open(p, "rb").read()
+
+    lone_lo = png("lo.png", "--amin", "50000")
+    assert lone_lo == png("lo_open.png", "--amin", "50000", "--amax", "1e300")
+    assert lone_lo != png("all.png")
+    assert png("hi.png", "--amax", "50000") == png("hi_open.png", "--amin=-1e300", "--amax", "50000")
+    with pytest.raises(ValueError, match="no sample survived the selection"):
+        cli.run(argv + ["--amin", "1e9"], spark=spark)
+
+
+@pytest.mark.parametrize(
+    "argv, flag",
+    [
+        (["--ared", "mean"], "--ared"),
+        (["-C", "corr_label", "--cnum", "0"], "--cnum"),
+        (["--xcanvas", "0"], "--xcanvas"),
+        (["--xcanvas", "-4"], "--xcanvas"),
+        (["--ycanvas", "0"], "--ycanvas"),
+    ],
+)
+def test_cli_bad_input_names_flag(tmp_path, spark, sf_dir, argv, flag):
+    """Input no canvas can draw raises a ValueError naming the flag,
+    before any Spark job runs and before anything is written."""
+    sc = spark.sparkContext
+    group = f"bad-input-{flag}-{'_'.join(argv)}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=flag):
+            cli.run([sf_dir, "-x", "time", "-y", "amp", "--dir", str(tmp_path), *argv], spark=spark)
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert not list(tmp_path.iterdir())
+
+
 def test_grid_bounds_skip_plots_without_samples(spark):
     """ShadePlot.bounds over a grid sample table: one range per plot
     that has a finite sample, each limit given on its own overriding
@@ -670,7 +715,7 @@ def test_grid_bounds_skip_plots_without_samples(spark):
     df = spark.createDataFrame([(1.0, 10.0), (3.0, 30.0)], "a double, b double")
     combos = [(F.col("a"), F.col("b"), False), (F.col("a"), F.lit(float("nan")), False)]
     samples = R.grid_samples(df, combos)
-    ranges = ShadePlot(x=F.col("xv"), y=F.col("yv"), x_range=(0.0, None)).bounds(samples, plots=2)
+    ranges = ShadePlot(x_range=(0.0, None)).bounds(samples, plots=2)
     assert ranges == {0: ((0.0, 3.0), (10.0, 30.0))}
     binned = R.grid_raster(samples, ranges, 4, 4).collect()
     assert sorted((r["p"], r["bx"], r["by"], r["val"]) for r in binned) == [(0, 1, 0, 1), (0, 3, 3, 1)]

@@ -46,10 +46,16 @@ def test_phase_edges(spark):
 
 
 def test_bin_edges(spark):
-    # half-open bins over [0,10) x 10 bins; max value clamps into last
-    df = spark.createDataFrame([Row(x=0.0), Row(x=0.999), Row(x=5.0), Row(x=10.0)])
-    out = [r[0] for r in df.select(R.bin_axis(F.col("x"), 0.0, 10.0, 10)).collect()]
-    assert out == [0, 0, 5, 9]
+    # half-open bins over [0,10) x 10 bins; max value clamps into last,
+    # with literal bounds and with Column bounds (grid_raster's form)
+    df = spark.createDataFrame([Row(x=x, lo=0.0, hi=10.0) for x in (0.0, 0.999, 5.0, 10.0)])
+    for lo, hi in ((0.0, 10.0), (F.col("lo"), F.col("hi"))):
+        out = [r[0] for r in df.select(R.bin_axis(F.col("x"), lo, hi, 10)).collect()]
+        assert out == [0, 0, 5, 9]
+    # a zero-width axis (constant x) bins every sample to 0
+    const = spark.createDataFrame([Row(x=3.0, lo=3.0, hi=3.0)] * 3)
+    for lo, hi in ((3.0, 3.0), (F.col("lo"), F.col("hi"))):
+        assert [r[0] for r in const.select(R.bin_axis(F.col("x"), lo, hi, 10)).collect()] == [0, 0, 0]
 
 
 def test_raster_count_conservation(spark, sf_dir):

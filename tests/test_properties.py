@@ -47,10 +47,11 @@ def test_raster_conserves_count(spark, pts):
 @settings(**SETTINGS)
 def test_bin_in_bounds(spark, pts):
     """Every in-range sample's bin index lands in [0, n)."""
-    df = spark.createDataFrame(pts, "x double, y double")
-    b = df.select(R.bin_axis(F.col("x"), -1e6, 1e6, 7).alias("b"))
-    mn, mx = b.agg(F.min("b"), F.max("b")).first()
-    assert 0 <= mn and mx <= 6
+    df = spark.createDataFrame(pts, "x double, y double").withColumn("lo", F.lit(-1e6)).withColumn("hi", F.lit(1e6))
+    for lo, hi in ((-1e6, 1e6), (F.col("lo"), F.col("hi"))):
+        b = df.select(R.bin_axis(F.col("x"), lo, hi, 7).alias("b"))
+        mn, mx = b.agg(F.min("b"), F.max("b")).first()
+        assert 0 <= mn and mx <= 6
 
 
 @given(pairs=st.lists(st.tuples(finite, finite), min_size=1, max_size=30))
@@ -160,13 +161,14 @@ def test_bin_edges(spark, lo, width, frac):
     """G1 edge ownership: lo maps to bin 0, hi clamps into bin n-1."""
     hi = lo + width
     x = lo + frac * width
-    df = spark.createDataFrame([(float(x),)], "x double")
-    b = df.select(R.bin_axis(F.col("x"), lo, hi, 8).alias("b")).first()["b"]
-    assert 0 <= b <= 7
-    if frac == 0.0:
-        assert b == 0
-    if frac == 1.0:
-        assert b == 7
+    df = spark.createDataFrame([(float(x), float(lo), float(hi))], "x double, lo double, hi double")
+    for bounds in ((lo, hi), (F.col("lo"), F.col("hi"))):
+        b = df.select(R.bin_axis(F.col("x"), *bounds, 8).alias("b")).first()["b"]
+        assert 0 <= b <= 7
+        if frac == 0.0:
+            assert b == 0
+        if frac == 1.0:
+            assert b == 7
 
 
 sessions_events = st.lists(

@@ -4,7 +4,8 @@ of two checkouts can be compared with ``diff``.
 
 The cases cover every norm, single plots and grids, the u/v conjugate
 mirror and --noconj, colour axes, every facet flavour, figures,
-spread/dynspread, aggregation axes, robust bounds and fixed limits.
+spread/dynspread, aggregation axes and their limits, robust bounds and
+fixed limits.
 
 Usage:
     python tools/cli_sweep.py FIXTURE_DIR OUT_DIR > sweep.txt
@@ -40,6 +41,7 @@ CASES = {
     "spread": ["-x", "uvdist", "-y", "amp", "--spread", "1"],
     "dynspread": ["-x", "u", "-y", "v", "--dynspread"],
     **{f"ared_{r}": ["-x", "time", "-y", "amp", "--ared", r, "-a", "DATA:real"] for r in ("mean", "std")},
+    "ared_clip": ["-x", "time", "-y", "amp", "--ared", "max", "-a", "DATA:real", "--amin", "0", "--amax", "50000"],
     "robust": ["-x", "uvdist", "-y", "amp", "--robust"],
     "limits": ["-x", "time", "-y", "amp", "--xmin", "2000", "--xmax", "2400", "--ymin", "0", "--ymax", "50000"],
     "grid_colour": ["-x", "time,uvdist", "-y", "amp", "-C", "corr_label", "--png", "{xname}_{yname}.png"],
