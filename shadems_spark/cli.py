@@ -8,7 +8,7 @@ tables whose ``lineitem`` plays the MS MAIN table (vis.py mapping).
 
 Lifecycle (two Spark jobs, [R] data_plots.py): selection + derived
 axes as one declarative plan -> batched bounds job when limits are
-unset -> binned canvas aggregation, collected once by the renderer ->
+unset -> binned canvas aggregation, fetched once by the renderer ->
 driver-side spread, shading and colouring of the canvas-bounded table
 -> PNG(s) via the stdlib writer.  Every request takes this one path:
 a single plot is a grid of one (x, y, col) combo, every combo is an
@@ -226,6 +226,14 @@ def _check(args) -> None:
     for flag in ("xcanvas", "ycanvas", "cnum"):
         if getattr(args, flag) < 1:
             raise ValueError(f"--{flag} must be at least 1, got {getattr(args, flag)}")
+    for flag, dest in (("--spread", "spread"), ("-z/--row-chunk-size", "row_chunk_size")):
+        if getattr(args, dest) < 0:
+            raise ValueError(f"{flag} must not be negative, got {getattr(args, dest)}")
+    # equal ends are allowed: a zero-width axis bins to 0
+    for axis in "xya":
+        lo, hi = getattr(args, f"{axis}min"), getattr(args, f"{axis}max")
+        if lo is not None and hi is not None and lo > hi:
+            raise ValueError(f"--{axis}min/--{axis}max are inverted: {lo} > {hi}")
     if args.ared not in (None, "count") and not args.aaxis:
         raise ValueError(f"--ared {args.ared} needs an aggregation axis (-a/--aaxis)")
 

@@ -8,7 +8,7 @@ aggregation ([R] create_plot).  Every plot is a grid sample table
 ``raster.grid_raster`` bins: :meth:`ShadePlot.run` and
 :meth:`ShadePlot.run_faceted` as a one-plot grid, the CLI as a grid of
 its combos.  The binned result (≤ W·H·ncat rows) is what a renderer
-consumes; collecting it to the driver is the PNG-sink analogue and is
+consumes; fetching it to the driver is the PNG-sink analogue and is
 cheap by construction.
 """
 

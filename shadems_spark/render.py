@@ -4,15 +4,17 @@ The engine's raster result is the *binned table* (≤ W·H·ncat rows by
 construction); shadeMS hands the equivalent xarray raster to
 ``datashader.transfer_functions.shade`` + matplotlib ([R]
 shade_ms/data_plots.py::create_plot tail ≈L300-420).  Here the
-renderer collects the binned table once and does everything after
-binning on the driver in numpy: the split into plots, spread and
-dynspread, shading (eq_hist / log / cbrt / linear) and colouring.
-It writes PNGs with the stdlib (zlib/struct) — no matplotlib or
-datashader dependency, so the sink works in any executor-less driver
-environment.
+renderer fetches the binned table once as Arrow columns
+(``DataFrame.toArrow``: one numpy array per column, no per-row
+objects) and does everything after binning on the driver in numpy:
+the split into plots, spread and dynspread, shading (eq_hist / log /
+cbrt / linear) and colouring.  It writes PNGs with the stdlib
+(zlib/struct) — no matplotlib or datashader dependency, so the sink
+works in any executor-less driver environment.
 
-Scale note: collect() here is safe at any input scale because the
-binned table's size is bounded by the canvas, not the data.
+Scale note: fetching the table to the driver is safe at any input
+scale because the binned table's size is bounded by the canvas, not
+the data.
 """
 
 from __future__ import annotations
@@ -21,6 +23,8 @@ import struct
 import zlib
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 
@@ -253,15 +257,16 @@ def write_png(path: str, rgba: np.ndarray) -> None:
         f.write(payload)
 
 
-def _columns(rows) -> dict[str, np.ndarray]:
-    """Collected binned rows -> one array per column.  Rows whose value
-    is null (a reduction over null samples only) have nothing to shade
-    and are dropped."""
-    if not rows:
-        return {"bx": np.zeros(0, np.int64), "by": np.zeros(0, np.int64), "val": np.zeros(0)}
-    cols = dict(zip(rows[0].__fields__, map(np.array, zip(*rows))))
-    keep = np.not_equal(cols["val"], None)
-    cols = {k: v[keep] for k, v in cols.items()}
+def _columns(table: pa.Table) -> dict[str, np.ndarray]:
+    """The fetched binned table -> one numpy array per column, in the
+    table's row order.  Rows whose value is null (a reduction over null
+    samples only) have nothing to shade and are dropped; string columns
+    (a facet group ``p``, the colour ``cat``) become numpy str arrays."""
+    table = table.filter(pc.is_valid(table["val"]))
+    cols = {}
+    for name, col in zip(table.column_names, table.columns):
+        a = col.to_numpy()
+        cols[name] = a.astype(str) if pa.types.is_string(col.type) else a
     cols["val"] = cols["val"].astype(np.float64)
     return cols
 
@@ -274,8 +279,8 @@ def _at(arg, group):
     return arg(group) if callable(arg) else arg
 
 
-def _rasters(rows, path, width, height, how, cmap, categories, spread_px, dynspread_threshold, bgcol):
-    """The body both renderers share: the collected binned table split
+def _rasters(table, path, width, height, how, cmap, categories, spread_px, dynspread_threshold, bgcol):
+    """The body both renderers share: the fetched binned table split
     into plots, each spread, shaded and coloured.  Yields (group,
     output path, shaded pixels, RGBA raster) per plot.
 
@@ -283,7 +288,7 @@ def _rasters(rows, path, width, height, how, cmap, categories, spread_px, dynspr
     group column ``p`` (the grid combo or the facet key) takes a
     {group: path} dict, which draws every key, also one with no pixels,
     or a function of the group, which draws each group present."""
-    cols = _columns(rows)
+    cols = _columns(table)
     if isinstance(path, str):
         plots = {None: cols}
     else:
@@ -318,11 +323,12 @@ def render_png(
     dynspread_threshold: float | None = None,
     bgcol: tuple[int, int, int] | None = None,
 ) -> list[str]:
-    """Binned table -> (spread) -> one shaded PNG per plot (``path`` as
-    in :func:`_rasters`); returns the paths written."""
+    """Binned table, fetched once as Arrow columns -> (spread) -> one
+    shaded PNG per plot (``path`` as in :func:`_rasters`); returns the
+    paths written."""
     written = []
     for _g, out, _pix, img in _rasters(
-        binned.collect(), path, width, height, how, cmap, categories,
+        binned.toArrow(), path, width, height, how, cmap, categories,
         spread_px, dynspread_threshold, bgcol,
     ):
         write_png(out, img)
@@ -350,15 +356,15 @@ def render_figure(
     """Binned table -> one labeled FIGURE png per plot: the raster
     composed with axes, tick labels, title and a colorbar (continuous)
     or category legend ([R] data_plots.py::create_plot tail; VERDICT
-    r03 #3).  Same shared body as render_png, plus the deterministic
-    composition in shadems_spark.figure.  ``x_range``, ``y_range``,
-    ``title``, ``xlabel`` and ``ylabel`` may vary per plot like
+    r03 #3).  Same Arrow fetch and shared body as render_png, plus the
+    deterministic composition in shadems_spark.figure.  ``x_range``,
+    ``y_range``, ``title``, ``xlabel`` and ``ylabel`` may vary per plot like
     ``path`` (see :func:`_at`); returns the paths written."""
     from shadems_spark.figure import compose_figure
 
     written = []
     for g, out, pix, raster in _rasters(
-        binned.collect(), path, width, height, how, cmap, categories,
+        binned.toArrow(), path, width, height, how, cmap, categories,
         spread_px, dynspread_threshold, None,
     ):
         val = pix["val"]

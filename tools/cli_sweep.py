@@ -5,7 +5,8 @@ of two checkouts can be compared with ``diff``.
 The cases cover every norm, single plots and grids, the u/v conjugate
 mirror and --noconj, colour axes, every facet flavour, figures,
 spread/dynspread, aggregation axes and their limits, robust bounds and
-fixed limits.
+fixed limits.  Cases draw a 128x96 canvas unless they give their own
+--xcanvas/--ycanvas.
 
 Usage:
     python tools/cli_sweep.py FIXTURE_DIR OUT_DIR > sweep.txt
@@ -31,6 +32,8 @@ CASES = {
     "mirror": ["-x", "u", "-y", "v"],
     "noconj": ["-x", "u", "-y", "v", "--noconj"],
     "colour": ["-x", "time", "-y", "amp", "-C", "corr_label"],
+    # more binned rows than one Arrow batch: batch order and colour mixing
+    "colour_large": ["-x", "time", "-y", "amp", "-C", "corr_label", "--xcanvas", "1280", "--ycanvas", "900"],
     **{
         f"iter_{k}": ["-x", "time", "-y", "amp", "--iter", k, "--png", "{xname}_{yname}{group}.png"]
         for k in ("corr", "field", "ant")
@@ -66,7 +69,8 @@ def main(argv: list[str]) -> int:
     lines = []
     for name, case in CASES.items():
         d = os.path.join(out, name)
-        argv = [fixture, *case, "--xcanvas", "128", "--ycanvas", "96", "--dir", d]
+        # a case's own --xcanvas/--ycanvas come later, so they win
+        argv = [fixture, "--xcanvas", "128", "--ycanvas", "96", *case, "--dir", d]
         for p in cli.run(argv, spark=spark):
             lines.append(f"{os.path.relpath(p, out)} {sha256(p)}")
     print("\n".join(sorted(lines)))
