@@ -48,31 +48,49 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     µs — integer-truncated exactly like DuckDB truncates the same
     column, keeping oracle parity).
 
-    The returned scan DataFrame is memoized per (path, dir mtime) via
+    The returned scan DataFrame is memoized per (path, file stamp) via
     the expression cache (r12; guide §7.3): ``spark.read.parquet``
     costs ~100 ms of driver-side schema inference + file listing per
     call — even for a 25-row dim — and every query build re-reads its
     tables, so one bench rep paid it ~80 times.  The cached value is
     an UNEXECUTED scan plan, not data: every action still reads the
     parquet files (same semantics as holding the df in a variable,
-    the normal Spark pattern).  The mtime key drops the cache when a
-    writer rewrites the directory; ``memo`` scopes it to the live
-    SparkContext, so a ``stop()`` and a new session in the same process
-    read the table afresh; ``SHADEMS_NO_EXPR_MEMO=1``
-    disables it for A/B.
+    the normal Spark pattern).  The :func:`table_stamp` key drops the
+    cache when a writer adds, removes or rewrites a file, also in
+    place; ``memo`` scopes it to the live SparkContext, so a ``stop()``
+    and a new session in the same process read the table afresh;
+    ``SHADEMS_NO_EXPR_MEMO=1`` disables it for A/B.
     """
     tune(spark)
-    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    path = _table_path(sf_dir, name)
     from shadems_spark.operators.exprcache import memo
 
     try:
-        stamp = os.path.getmtime(path)
+        stamp = table_stamp(sf_dir, name)
     except OSError:
         # missing path: let the reader raise its own (uncached) error
         return _read_table(spark, path, name)
     return memo(
         ("load_table", path, stamp), lambda: _read_table(spark, path, name)
     )
+
+
+def _table_path(sf_dir: str, name: str) -> str:
+    return f"{sf_dir.rstrip('/')}/{name}.parquet"
+
+
+def table_stamp(sf_dir: str, name: str) -> tuple:
+    """(path, size, mtime_ns) of every file of a table, sorted — no
+    Spark call.  A rewrite in place changes a file's stamp even where
+    it leaves its directory's mtime alone.  Raises OSError when the
+    table is missing."""
+    root = _table_path(sf_dir, name)
+    files = [os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs] if os.path.isdir(root) else [root]
+    stamp = []
+    for path in sorted(files):
+        st = os.stat(path)
+        stamp.append((path, st.st_size, st.st_mtime_ns))
+    return tuple(stamp)
 
 
 def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:

@@ -6,15 +6,24 @@ normalization, canvas, iteration, PNG templating) against the driver
 fixtures: the positional ``ms`` argument is a directory of parquet
 tables whose ``lineitem`` plays the MS MAIN table (vis.py mapping).
 
-Lifecycle (two Spark jobs, [R] data_plots.py): selection + derived
-axes as one declarative plan -> batched bounds job when limits are
-unset -> binned canvas aggregation, fetched once by the renderer ->
-driver-side spread, shading and colouring of the canvas-bounded table
--> PNG(s) via the stdlib writer.  Every request takes this one path:
-a single plot is a grid of one (x, y, col) combo, every combo is an
-element of one sample table, and ``--colour-by``/``--iter`` keys join
-the raster groupBy.  The plot group is a column of the binned table,
-split on the driver — never a per-plot job.
+Lifecycle (at most two Spark jobs, [R] data_plots.py): selection +
+derived axes as one declarative plan -> batched bounds job when limits
+are unset -> binned canvas aggregation, fetched once as Arrow columns
+-> driver-side spread, shading and colouring of the canvas-bounded
+table (render.py) -> PNG(s) via the stdlib writer.  Every request
+takes this one path: a single plot is a grid of one (x, y, col) combo,
+every combo is an element of one sample table, and
+``--colour-by``/``--iter`` keys join the raster groupBy.  The plot
+group is a column of the binned table, split on the driver — never a
+per-plot job.
+
+Aggregate once, shade many: the driver-side results of the request's
+Spark actions (the ``-z`` row count, the colour categories, the bounds
+and the binned table) are kept for the live session, keyed on the
+plan, the action and the stamp of the input files
+(``exprcache.memo_result``).  A request that only changes
+``--norm``, ``--cmap``, ``--figure``, ``--spread``, ``--bgcol`` or the
+output names of an earlier one over unchanged files runs no Spark job.
 
     python -m shadems_spark /root/testdata/sf0.001 \
         -x time -y DATA:amp --field O --norm eq_hist --png out.png
@@ -30,10 +39,11 @@ import os
 
 from pyspark.sql import functions as F
 
-from shadems_spark.catalog import load_table
+from shadems_spark.catalog import load_table, table_stamp
 from shadems_spark.operators import mappers as M
 from shadems_spark.operators import raster as R
 from shadems_spark.operators import selection as S
+from shadems_spark.operators.exprcache import memo_result
 from shadems_spark.plans.shadeplot import ShadePlot
 from shadems_spark.render import _CMAPS, parse_color, render_figure, render_png
 from shadems_spark.session import get_spark
@@ -154,14 +164,56 @@ def _expand_combos(args) -> list[tuple[str, str, str]]:
     return out
 
 
-def _prepare(args, spark, specs: list[str]):
+def _fetch(df, action: str, stamp):
+    """``df.<action>()``, or its result kept from an earlier request
+    over the same plan and input files ``stamp``."""
+    return memo_result(df, action, stamp, getattr(df, action))
+
+
+def _baselines(specs: list[str] | None) -> list[tuple[int, int]]:
+    """--baseline "a1-a2" strings -> antenna pairs."""
+    pairs = []
+    for b in specs or ():
+        a1, _, a2 = b.partition("-")
+        try:
+            pairs.append((int(a1), int(a2)))
+        except ValueError:
+            raise ValueError(f'--baseline takes "a1-a2" antenna pairs, got {b!r}') from None
+    return pairs
+
+
+def _chan_slice(chan: str, nchan: int) -> tuple[int, int, int]:
+    """--chan "start:stop[:step]" -> (start, stop, step) over ``nchan``
+    channels: an empty start is 0, an empty or missing stop is
+    ``nchan``, an empty or 0 step is 1.  A slice that selects no
+    channel of [0, nchan) is refused."""
+    try:
+        parts = [int(v) if v else None for v in chan.split(":")]
+    except ValueError:
+        parts = []
+    if not 1 <= len(parts) <= 3:
+        raise ValueError(f"--chan takes start:stop[:step] integers, got {chan!r}")
+    start, stop, step = parts + [None] * (3 - len(parts))
+    start, stop, step = start or 0, nchan if stop is None else stop, step or 1
+    # the first channel at or after both 0 and start on start's step
+    lo = max(start, 0)
+    first = lo + (start - lo) % abs(step)
+    if first >= min(stop, nchan):
+        raise ValueError(f"--chan {chan} selects no channel of --nchan {nchan}")
+    return start, stop, step
+
+
+def _prepare(args, spark, specs: list[str], stamp):
     """Shared extract: load + selection + flags (+ the channel
     dimension when any axis in ``specs`` needs it)."""
     df = vis_view(load_table(spark, args.ms, "lineitem"))
+    # the view's columns are known without a job
+    if args.colour_by and args.colour_by.lower() not in {c.lower() for c in df.columns}:
+        raise ValueError(f"-C/--colour-by: no column {args.colour_by!r} in {', '.join(df.columns)}")
     if args.row_chunk_size:
         # -z is rows PER CHUNK (reference parity), not a partition
         # count — derive partitions from the table size (ADVICE r01).
-        df = df.repartition(_chunk_partitions(df.count(), args.row_chunk_size))
+        df = df.repartition(_chunk_partitions(_fetch(df, "count", stamp), args.row_chunk_size))
 
     # --- selection (F1/F2/F3/F4/F6), conjunctive like the reference
     if args.field:
@@ -171,8 +223,7 @@ def _prepare(args, spark, specs: list[str]):
     if args.ant:
         df = S.select_antennas(df, args.ant)
     if args.baseline:
-        pairs = [tuple(int(v) for v in b.split("-", 1)) for b in args.baseline]
-        df = S.select_baselines(df, pairs)
+        df = S.select_baselines(df, _baselines(args.baseline))
     df = S.apply_flags(df, noflags=args.noflags)
 
     # --- channel dimension (P7/P9): attach via broadcast cross join
@@ -181,10 +232,7 @@ def _prepare(args, spark, specs: list[str]):
     if needs_chan:
         df = df.crossJoin(F.broadcast(M.chan_freqs(spark, n_chan=args.nchan)))
         if args.chan:
-            parts = [int(v) if v else None for v in args.chan.split(":")]
-            start, stop = parts[0] or 0, parts[1] if len(parts) > 1 else args.nchan
-            step = parts[2] if len(parts) > 2 and parts[2] else 1
-            df = S.chan_slice(df, "chan", start, stop if stop is not None else args.nchan, step)
+            df = S.chan_slice(df, "chan", *_chan_slice(args.chan, args.nchan))
     return df
 
 
@@ -206,24 +254,22 @@ def _render(args, binned, path, x_range, y_range, title, xlabel, ylabel, categor
     return render_png(binned, path, args.xcanvas, args.ycanvas, **kw)
 
 
-def _categories(df, cat, plots, cnum: int):
+def _categories(df, cat, plots, cnum: int, stamp):
     """G7: the ``cnum`` most frequent values of ``cat`` among the rows
     some plot draws (finite x and y), the rest as 'other'.  Returns the
     category Column and the legend's category list."""
     drawn = functools.reduce(operator.or_, [S.finite(x) & S.finite(y) for x, y, _ in plots])
-    top = [
-        r[0]
-        for r in df.filter(drawn).groupBy(cat.alias("c")).count()
-        .orderBy(F.desc("count"), "c").limit(cnum).collect()
-    ]
+    counts = df.filter(drawn).groupBy(cat.alias("c")).count()
+    top = [r[0] for r in _fetch(counts.orderBy(F.desc("count"), "c").limit(cnum), "collect", stamp)]
     column = F.when(cat.isin(top), cat).otherwise(F.lit("other"))
     return column, sorted(top) + (["other"] if len(top) >= cnum else [])
 
 
 def _check(args) -> None:
-    """Reject requests no canvas can draw, naming the flag, before any
-    Spark job runs."""
-    for flag in ("xcanvas", "ycanvas", "cnum"):
+    """Reject requests no canvas can draw and selections that do not
+    parse or select nothing, naming the flag, before any Spark job
+    runs."""
+    for flag in ("xcanvas", "ycanvas", "cnum", "nchan"):
         if getattr(args, flag) < 1:
             raise ValueError(f"--{flag} must be at least 1, got {getattr(args, flag)}")
     for flag, dest in (("--spread", "spread"), ("-z/--row-chunk-size", "row_chunk_size")):
@@ -236,6 +282,16 @@ def _check(args) -> None:
             raise ValueError(f"--{axis}min/--{axis}max are inverted: {lo} > {hi}")
     if args.ared not in (None, "count") and not args.aaxis:
         raise ValueError(f"--ared {args.ared} needs an aggregation axis (-a/--aaxis)")
+    # the renderer holds at least one W x H RGBA canvas
+    need, mem = args.xcanvas * args.ycanvas * 4, os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    if need > mem:
+        raise ValueError(
+            f"--xcanvas/--ycanvas {args.xcanvas}x{args.ycanvas} needs {need / 2**30:.1f} GiB "
+            f"for one RGBA canvas, more than the {mem / 2**30:.1f} GiB of memory here"
+        )
+    _baselines(args.baseline)
+    if args.chan:
+        _chan_slice(args.chan, args.nchan)
 
 
 def run(argv: list[str] | None = None, spark=None) -> list[str]:
@@ -243,13 +299,15 @@ def run(argv: list[str] | None = None, spark=None) -> list[str]:
 
     Every request is a grid of one or more (x, y, col) plots: one
     extract, one sample table (raster.grid_samples), one bounds job
-    and one raster job for all of them."""
+    and one raster job for all of them, each skipped when an earlier
+    request over the same input files kept its result."""
     args = build_parser().parse_args(argv)
     _check(args)
     spark = spark or get_spark("shadems-cli")
+    stamp = table_stamp(args.ms, "lineitem")
     combos = _expand_combos(args)
     specs = [s for xs, ys, _ in combos for s in (xs, ys)] + ([args.aaxis] if args.aaxis else [])
-    df = _prepare(args, spark, specs)
+    df = _prepare(args, spark, specs, stamp)
 
     cols = {}  # per-row columns every sample of the row carries
     if args.aaxis:
@@ -269,11 +327,11 @@ def run(argv: list[str] | None = None, spark=None) -> list[str]:
         names.append((xname, yname))
     categories = None
     if args.colour_by:
-        cols["cat"], categories = _categories(df, F.col(args.colour_by).cast("string"), plots, args.cnum)
+        cols["cat"], categories = _categories(df, F.col(args.colour_by).cast("string"), plots, args.cnum, stamp)
 
     samples = R.grid_samples(df, plots, cols)
     plot = ShadePlot(x_range=(args.xmin, args.xmax), y_range=(args.ymin, args.ymax), robust=args.robust)
-    ranges = plot.bounds(samples, plots=len(plots))
+    ranges = plot.bounds(samples, plots=len(plots), collect=lambda d: _fetch(d, "collect", stamp))
     if not ranges:
         raise ValueError("no sample survived the selection")
     binned = R.grid_raster(
@@ -302,7 +360,7 @@ def run(argv: list[str] | None = None, spark=None) -> list[str]:
     return _render(
         # a grid draws every plot with a range, also one with no pixel;
         # facets draw each group present
-        args, binned, path if facet else {p: path(p) for p in sorted(ranges)},
+        args, _fetch(binned, "toArrow", stamp), path if facet else {p: path(p) for p in sorted(ranges)},
         x_range=lambda g: ranges[split(g)[0]][0], y_range=lambda g: ranges[split(g)[0]][1],
         title=(lambda g: f"{ms_name} {split(g)[1]}") if facet else ms_name,
         xlabel=lambda g: names[split(g)[0]][0], ylabel=lambda g: names[split(g)[0]][1],

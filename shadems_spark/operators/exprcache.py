@@ -20,12 +20,19 @@ Rules for call sites:
 - the cache is automatically scoped to the live SparkContext, so a
   session restart within one process can never serve stale Java refs.
 
-``SHADEMS_NO_EXPR_MEMO=1`` disables caching (A/B measurement).
+Beside it, :func:`memo_result` keeps the driver-side RESULTS of the
+CLI's Spark actions (row count, categories, bounds, the binned table)
+per plan, action and input-file stamp, within a byte budget: a request
+that only re-styles an earlier binning runs no Spark job.  Both caches
+follow the live SparkContext.
+
+``SHADEMS_NO_EXPR_MEMO=1`` disables both (A/B measurement).
 """
 
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
 
 _CACHE: dict = {}
 
@@ -48,14 +55,15 @@ _MAX_ENTRIES = 8192
 _OWNER_TOKEN: object | None = None
 
 
-def memo(key: tuple, build):
-    """Return ``build()`` cached under ``key`` (+ the live SparkContext)."""
+def _disabled() -> bool:
     # explicit truthy parse (ADVICE r11): SHADEMS_NO_EXPR_MEMO=0 must
     # NOT disable memoization just by being set.
-    if os.environ.get("SHADEMS_NO_EXPR_MEMO", "").lower() in (
-        "1", "true", "yes",
-    ):  # A/B gate
-        return build()
+    return os.environ.get("SHADEMS_NO_EXPR_MEMO", "").lower() in ("1", "true", "yes")
+
+
+def _own_context() -> None:
+    """Drop every entry of both caches when the live SparkContext is
+    not the one they were made under."""
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
@@ -67,10 +75,70 @@ def memo(key: tuple, build):
             tok = sc._shadems_memo_token = object()
     if tok is not _OWNER_TOKEN:
         _CACHE.clear()
+        _RESULTS.clear()
         _OWNER_TOKEN = tok
+
+
+def memo(key: tuple, build):
+    """Return ``build()`` cached under ``key`` (+ the live SparkContext)."""
+    if _disabled():  # A/B gate
+        return build()
+    _own_context()
     col = _CACHE.get(key)
     if col is None:
         if len(_CACHE) >= _MAX_ENTRIES:
             _CACHE.clear()
         col = _CACHE[key] = build()
     return col
+
+
+#: Driver-side results of Spark actions: (action, input stamp, plan
+#: hash) -> (DataFrame, result, bytes), least recently used first.  A
+#: request that only re-styles an earlier binning (another norm, colour
+#: map, figure or spread) meets the same plans over the same files, and
+#: its actions are served from here without a Spark job.
+_RESULTS: OrderedDict = OrderedDict()
+
+#: Byte budget of ``_RESULTS``, counted in Arrow ``nbytes`` (collected
+#: rows count 0: a bounds or categories result is a few rows).  Seven
+#: 1280x900 binned tables of ~300k pixels fit.  The entry cap bounds
+#: the plans (py4j references) kept for small results; a CLI request
+#: keeps at most four.
+_RESULT_BYTES = 64 * 2**20
+_RESULT_ENTRIES = 256
+
+
+def memo_result(df, action: str, stamp, run):
+    """Return ``run()``, the driver-side result of the Spark action
+    ``action`` over ``df``, kept for the live SparkContext.
+
+    A kept result is served when the same action meets the same plan
+    over unchanged input files: ``stamp`` identifies the input files
+    (``catalog.table_stamp``), since two reads of one path have the
+    same plan after a file changed.  The plan is looked up by
+    ``df.semanticHash()`` and confirmed with ``df.sameSemantics``, the
+    hash being only 32 bits (a colliding plan replaces the entry).  A
+    failed action raises and is not kept; a result over the byte
+    budget is returned but not kept.
+    """
+    if _disabled():  # A/B gate
+        return run()
+    _own_context()
+    key = (action, stamp, df.semanticHash())
+    kept = _RESULTS.get(key)
+    if kept is not None and df.sameSemantics(kept[0]):
+        _RESULTS.move_to_end(key)
+        return kept[1]
+    result = run()
+    size = getattr(result, "nbytes", 0)
+    if size <= _RESULT_BYTES:
+        _RESULTS[key] = (df, result, size)
+        _RESULTS.move_to_end(key)
+        while len(_RESULTS) > _RESULT_ENTRIES or sum(s for _df, _r, s in _RESULTS.values()) > _RESULT_BYTES:
+            _RESULTS.popitem(last=False)
+    return result
+
+
+def clear_results() -> None:
+    """Forget every kept action result (the next action runs its job)."""
+    _RESULTS.clear()

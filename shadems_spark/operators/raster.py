@@ -197,11 +197,20 @@ def grid_raster(
         )
 
     (xlo, xhi), (ylo, yhi) = (lits(0, 0), lits(0, 1)), (lits(1, 0), lits(1, 1))
+    # the groupBy keys on one long pixel id, (p*H + by)*W + bx, decoded
+    # after the aggregate: one hashed key instead of three
+    pix = (
+        F.col("p").cast("long") * height + bin_axis(F.col("yv"), ylo, yhi, height)
+    ) * width + bin_axis(F.col("xv"), xlo, xhi, width)
     binned = (
         samples.filter(
             F.col("xv").between(xlo, xhi) & F.col("yv").between(ylo, yhi)
         )
-        .withColumn("bx", bin_axis(F.col("xv"), xlo, xhi, width))
-        .withColumn("by", bin_axis(F.col("yv"), ylo, yhi, height))
+        .groupBy(pix.alias("pix"), *keys)
+        .agg(REDUCTIONS[reduction](value).alias("val"))
     )
-    return binned.groupBy("p", *keys, "by", "bx").agg(REDUCTIONS[reduction](value).alias("val"))
+    return binned.select(
+        F.expr(f"cast(pix div {width * height} as int)").alias("p"), *keys,
+        F.expr(f"pix div {width} % {height}").alias("by"),
+        (F.col("pix") % width).alias("bx"), "val",
+    )

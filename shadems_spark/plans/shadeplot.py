@@ -42,12 +42,13 @@ class ShadePlot:
     #: min/max — outlier samples can't stretch the canvas (§4 ext).
     robust: bool = False
 
-    def bounds(self, df: DataFrame, plots: int):
+    def bounds(self, df: DataFrame, plots: int, collect=DataFrame.collect):
         """Job 1 — only runs if a limit is unset; every unset limit of
         every plot is batched into one aggregate ([R] compute_bounds
         batches all unknown limits into a single dask compute), grouped
         by the plot column of ``df``, a grid sample table of ``plots``
-        plots (``raster.grid_samples``).
+        plots (``raster.grid_samples``).  ``collect`` runs the job
+        (the CLI's serves a kept result, see ``exprcache.memo_result``).
 
         Returns {p: ((xlo, xhi), (ylo, yhi))} for every plot with a
         sample, or for every plot when every limit is given and no job
@@ -63,7 +64,7 @@ class ShadePlot:
 
         pass_fn = R.robust_bounds if self.robust else R.minmax
         cols = {"x": F.col("xv"), "y": F.col("yv")}
-        return {r["p"]: resolve(r) for r in pass_fn(df.groupBy("p"), cols).collect()}
+        return {r["p"]: resolve(r) for r in collect(pass_fn(df.groupBy("p"), cols))}
 
     def run(self, df: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
         """Job 2 — the count raster of (x, y) as a one-plot grid, with

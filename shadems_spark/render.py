@@ -4,9 +4,10 @@ The engine's raster result is the *binned table* (≤ W·H·ncat rows by
 construction); shadeMS hands the equivalent xarray raster to
 ``datashader.transfer_functions.shade`` + matplotlib ([R]
 shade_ms/data_plots.py::create_plot tail ≈L300-420).  Here the
-renderer fetches the binned table once as Arrow columns
-(``DataFrame.toArrow``: one numpy array per column, no per-row
-objects) and does everything after binning on the driver in numpy:
+renderer takes the binned table as fetched once by the caller as
+Arrow columns (``DataFrame.toArrow``: one numpy array per column, no
+per-row objects; ``cli`` keeps the fetched table for re-styling
+requests) and does everything after binning on the driver in numpy:
 the split into plots, spread and dynspread, shading (eq_hist / log /
 cbrt / linear) and colouring.  It writes PNGs with the stdlib
 (zlib/struct) — no matplotlib or datashader dependency, so the sink
@@ -25,8 +26,6 @@ import zlib
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-
-from pyspark.sql import DataFrame
 
 #: colormap name -> anchor colors (linear-interpolated, 256-entry LUT).
 #: Names follow the colorcet/matplotlib/cmasher families shadeMS
@@ -312,7 +311,7 @@ def _rasters(table, path, width, height, how, cmap, categories, spread_px, dynsp
 
 
 def render_png(
-    binned: DataFrame,
+    binned: pa.Table,
     path,
     width: int,
     height: int,
@@ -323,12 +322,12 @@ def render_png(
     dynspread_threshold: float | None = None,
     bgcol: tuple[int, int, int] | None = None,
 ) -> list[str]:
-    """Binned table, fetched once as Arrow columns -> (spread) -> one
-    shaded PNG per plot (``path`` as in :func:`_rasters`); returns the
-    paths written."""
+    """Binned table, fetched as Arrow columns -> (spread) -> one shaded
+    PNG per plot (``path`` as in :func:`_rasters`); returns the paths
+    written."""
     written = []
     for _g, out, _pix, img in _rasters(
-        binned.toArrow(), path, width, height, how, cmap, categories,
+        binned, path, width, height, how, cmap, categories,
         spread_px, dynspread_threshold, bgcol,
     ):
         write_png(out, img)
@@ -337,7 +336,7 @@ def render_png(
 
 
 def render_figure(
-    binned: DataFrame,
+    binned: pa.Table,
     path,
     width: int,
     height: int,
@@ -356,7 +355,7 @@ def render_figure(
     """Binned table -> one labeled FIGURE png per plot: the raster
     composed with axes, tick labels, title and a colorbar (continuous)
     or category legend ([R] data_plots.py::create_plot tail; VERDICT
-    r03 #3).  Same Arrow fetch and shared body as render_png, plus the
+    r03 #3).  Same Arrow table and shared body as render_png, plus the
     deterministic composition in shadems_spark.figure.  ``x_range``,
     ``y_range``, ``title``, ``xlabel`` and ``ylabel`` may vary per plot like
     ``path`` (see :func:`_at`); returns the paths written."""
@@ -364,7 +363,7 @@ def render_figure(
 
     written = []
     for g, out, pix, raster in _rasters(
-        binned.toArrow(), path, width, height, how, cmap, categories,
+        binned, path, width, height, how, cmap, categories,
         spread_px, dynspread_threshold, None,
     ):
         val = pix["val"]

@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 
 from shadems_spark import cli
+from shadems_spark.operators import exprcache
 from shadems_spark.render import lut, raster_to_rgba, render_png, write_png
 
 
@@ -83,6 +84,7 @@ def test_cli_deterministic(tmp_path, spark, sf_dir):
         "--dir", str(tmp_path),
     ]
     p1 = cli.run(argv + ["--png", "a.png"], spark=spark)[0]
+    exprcache.clear_results()  # the second run runs its jobs again
     p2 = cli.run(argv + ["--png", "b.png"], spark=spark)[0]
     assert open(p1, "rb").read() == open(p2, "rb").read()
 
@@ -580,13 +582,15 @@ def test_cli_spark_jobs_per_run(tmp_path, spark, sf_dir):
     shaded on the driver from the one collected raster: none of them
     starts more Spark jobs than the same single plot, also when a grid
     adds a colour axis or facets.  With every limit given, no bounds
-    job runs."""
+    job runs.  Each measurement starts with no kept action result, so
+    it counts a first run's jobs."""
     sc = spark.sparkContext
     base = [sf_dir, "-y", "amp", "--xcanvas", "16", "--ycanvas", "16", "--dir", str(tmp_path)]
     ids = itertools.count()
 
     def jobs(*argv):
         group = f"jobs-per-run-{next(ids)}"
+        exprcache.clear_results()
         sc.setJobGroup(group, group)
         try:
             cli.run(base + list(argv), spark=spark)
@@ -691,11 +695,22 @@ def test_cli_lone_agg_limit(tmp_path, spark, sf_dir):
         (["--ared", "max", "-a", "DATA:real", "--amin", "5", "--amax", "1"], "--amin"),
         (["--spread", "-1"], "--spread"),
         (["-z", "-5"], "-z"),
+        (["-x", "uvwave", "--chan", "a:b"], "--chan"),
+        (["-x", "uvwave", "--chan", "5:2"], "--chan"),
+        (["-x", "uvwave", "--nchan", "0"], "--nchan"),
+        (["--baseline", "1x2"], "--baseline"),
+        (["--baseline", "1-"], "--baseline"),
+        (["-C", "no_such_column"], "--colour-by"),
+        # 3.6 TiB of RGBA, more than any machine: refused, not allocated
+        (["--xcanvas", "1000000", "--ycanvas", "1000000"], "--xcanvas"),
     ],
 )
 def test_cli_bad_input_names_flag(tmp_path, spark, sf_dir, argv, flag):
     """Input no canvas can draw raises a ValueError naming the flag,
     before any Spark job runs and before anything is written."""
+    from shadems_spark.catalog import load_table
+
+    load_table(spark, sf_dir, "lineitem")  # a first scan reads the schema
     sc = spark.sparkContext
     group = f"bad-input-{flag}-{'_'.join(argv)}"
     sc.setJobGroup(group, group)
@@ -742,9 +757,9 @@ def test_render_drops_null_values(tmp_path, spark):
     byte-identical to the same table without that row."""
     schema = "by int, bx int, val double"
     rows = [(0, 0, 1.0), (1, 2, 3.0), (2, 1, None), (3, 3, 2.0)]
-    with_null = render_png(spark.createDataFrame(rows, schema), str(tmp_path / "a.png"), 4, 4)
+    with_null = render_png(spark.createDataFrame(rows, schema).toArrow(), str(tmp_path / "a.png"), 4, 4)
     without = render_png(
-        spark.createDataFrame([r for r in rows if r[2] is not None], schema), str(tmp_path / "b.png"), 4, 4,
+        spark.createDataFrame([r for r in rows if r[2] is not None], schema).toArrow(), str(tmp_path / "b.png"), 4, 4,
     )
     assert open(with_null[0], "rb").read() == open(without[0], "rb").read()
 
@@ -753,7 +768,7 @@ def test_render_empty_table_draws_background(tmp_path, spark):
     """An empty binned table keeps its schema: a {0: path} dict still
     draws plot 0, background only."""
     path = str(tmp_path / "empty.png")
-    empty = spark.createDataFrame([], "p int, by int, bx int, val long")
+    empty = spark.createDataFrame([], "p int, by int, bx int, val long").toArrow()
     assert render_png(empty, {0: path}, 5, 3, bgcol=(255, 255, 255)) == [path]
     want = str(tmp_path / "want.png")
     write_png(want, np.full((3, 5, 4), 255, dtype=np.uint8))
@@ -770,7 +785,7 @@ def test_render_string_groups_sorted(tmp_path, spark):
         return str(tmp_path / f"{g.replace(':', '_')}.png")
 
     rows = [("0:B", 0, 0, 2), ("0:A", 1, 1, 1), ("0:B", 1, 0, 1)]
-    binned = spark.createDataFrame(rows, "p string, by int, bx int, val long")
+    binned = spark.createDataFrame(rows, "p string, by int, bx int, val long").toArrow()
     written = render_png(binned, path, 2, 2)
     assert seen == ["0:A", "0:B"] and all(isinstance(g, str) for g in seen)
     assert written == [str(tmp_path / "0_A.png"), str(tmp_path / "0_B.png")]
@@ -787,8 +802,121 @@ def test_render_allocation_bound(tmp_path, spark):
     )
     tracemalloc.start()
     try:
-        render_png(binned, str(tmp_path / "dense.png"), 1280, 900)
+        render_png(binned.toArrow(), str(tmp_path / "dense.png"), 1280, 900)
         peak = tracemalloc.get_traced_memory()[1]
     finally:
         tracemalloc.stop()
     assert peak < 60 * 2**20, peak
+
+
+def _jobs_of(spark, group, fn):
+    """Run ``fn()`` under a job group; returns (result, jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cli_restyle_runs_no_job(tmp_path, spark, sf_dir):
+    """A request that only changes --norm, --cmap, --figure or --spread
+    of an earlier one re-uses its bounds and binned table: it starts no
+    Spark job and writes the PNG a run with nothing kept writes."""
+    base = [sf_dir, "-x", "time,uvdist", "-y", "amp", "-C", "corr_label",
+            "--xcanvas", "24", "--ycanvas", "16", "--dir", str(tmp_path)]
+    _, first = _jobs_of(spark, "restyle-first", lambda: cli.run(base + ["--png", "a_{xname}.png"], spark=spark))
+    assert first > 0
+    for i, extra in enumerate((["--norm", "log"], ["--cmap", "fire"], ["--figure"], ["--spread", "1"])):
+        argv = base + extra + ["--png", f"r{i}_{{xname}}.png"]
+        kept, n = _jobs_of(spark, f"restyle-{i}", lambda: cli.run(argv, spark=spark))
+        assert n == 0, extra
+        exprcache.clear_results()
+        fresh, n = _jobs_of(spark, f"restyle-fresh-{i}", lambda: cli.run(argv[:-1] + [f"f{i}_{{xname}}.png"], spark=spark))
+        assert n > 0, extra
+        assert [open(p, "rb").read() for p in kept] == [open(p, "rb").read() for p in fresh], extra
+
+
+def test_cli_input_rewritten_in_place_reruns(tmp_path, spark, sf_dir):
+    """Rewriting the input parquet in place makes the next identical
+    request run its jobs again and draw the new rows."""
+    import pyarrow.parquet as pq
+
+    ms = tmp_path / "ms"
+    ms.mkdir()
+    table = pq.read_table(f"{sf_dir}/lineitem.parquet")
+    pq.write_table(table, ms / "lineitem.parquet")
+    argv = [str(ms), "-x", "time", "-y", "amp", "--xcanvas", "24", "--ycanvas", "16", "--dir", str(tmp_path / "out")]
+
+    def png(name):
+        [p] = cli.run(argv + ["--png", name], spark=spark)
+        return open(p, "rb").read()
+
+    old = png("old.png")
+    pq.write_table(table.slice(0, table.num_rows // 3), ms / "lineitem.parquet")
+    new, n = _jobs_of(spark, "rewritten-input", lambda: png("new.png"))
+    assert n > 0
+    exprcache.clear_results()
+    assert new == png("fresh.png") != old
+
+
+def test_cli_memo_after_session_restart(sf_dir):
+    """After a session restart the same request runs all its jobs again
+    (nothing kept under the stopped session is served).  Runs in a
+    subprocess so the shared test session is left alone."""
+    import os
+    import subprocess
+    import sys
+    import tempfile
+
+    code = f"""
+from shadems_spark import cli
+from shadems_spark.session import get_spark
+
+def jobs():
+    spark = get_spark("memo-restart")
+    sc = spark.sparkContext
+    sc.setJobGroup("g", "g")
+    cli.run([{sf_dir!r}, "-x", "time", "-y", "amp", "--xcanvas", "8", "--ycanvas", "8", "--dir", {tempfile.mkdtemp()!r}], spark=spark)
+    n = len(sc.statusTracker().getJobIdsForGroup("g"))
+    spark.stop()
+    return n
+
+first, again = jobs(), jobs()
+assert first > 0 and again == first, (first, again)
+print("ok")
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(cli.__file__)))
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "PYTHONPATH": root}
+    p = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True, timeout=300, env=env)
+    assert p.returncode == 0 and p.stdout.strip().endswith("ok"), p.stderr[-2000:]
+
+
+def test_memo_result_keys_and_budget(spark, monkeypatch):
+    """memo_result serves a kept result only to the same plan (also one
+    built again), action and input stamp; keeps nothing of a failed
+    action; and past its byte budget drops the least recently used."""
+
+    class Sized:  # a result of a given Arrow size
+        def __init__(self, nbytes):
+            self.nbytes = nbytes
+
+    def fail():
+        raise RuntimeError("job failed")
+
+    monkeypatch.setattr(exprcache, "_RESULT_BYTES", 100)
+    exprcache.clear_results()
+    a, b, c = (spark.range(n) for n in (1, 2, 3))
+    kept_a = exprcache.memo_result(a, "toArrow", "s", lambda: Sized(60))
+    assert exprcache.memo_result(spark.range(1), "toArrow", "s", fail) is kept_a
+    assert exprcache.memo_result(a, "toArrow", "s2", lambda: Sized(1)) is not kept_a
+    assert exprcache.memo_result(a, "count", "s", lambda: Sized(1)) is not kept_a
+    with pytest.raises(RuntimeError):
+        exprcache.memo_result(b, "toArrow", "s", fail)
+    exprcache.memo_result(b, "toArrow", "s", lambda: Sized(30))
+    exprcache.memo_result(a, "toArrow", "s", fail)  # a is now the most recently used
+    exprcache.memo_result(c, "toArrow", "s", lambda: Sized(30))  # 122 bytes: drops s2, count, b
+    assert exprcache.memo_result(a, "toArrow", "s", fail) is kept_a
+    assert exprcache.memo_result(b, "toArrow", "s", lambda: "again") == "again"
+    exprcache.clear_results()

@@ -159,3 +159,17 @@ print("ok")
         [sys.executable, "-c", code], capture_output=True, text=True, timeout=300, env=env,
     )
     assert p.returncode == 0 and p.stdout.strip().endswith("ok"), p.stderr[-2000:]
+
+
+def test_load_table_sees_part_file_rewritten_in_place(spark, tmp_path):
+    """A part file rewritten in place (the directory's mtime unchanged)
+    is read afresh: the scan memo keys on every file's size and mtime."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part = tmp_path / "t.parquet" / "part-0.parquet"
+    part.parent.mkdir()
+    pq.write_table(pa.table({"a": list(range(10))}), part)
+    assert catalog.load_table(spark, str(tmp_path), "t").count() == 10
+    pq.write_table(pa.table({"a": list(range(1000))}), part)
+    assert catalog.load_table(spark, str(tmp_path), "t").count() == 1000

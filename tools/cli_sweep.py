@@ -8,6 +8,11 @@ spread/dynspread, aggregation axes and their limits, robust bounds and
 fixed limits.  Cases draw a 128x96 canvas unless they give their own
 --xcanvas/--ycanvas.
 
+Every case runs twice in the one session: the second pass re-uses the
+results the first one kept (cli's action memo) and must write the
+same bytes.  The tool exits 1 if any PNG of the second pass differs;
+it prints the first pass's lines only.
+
 Usage:
     python tools/cli_sweep.py FIXTURE_DIR OUT_DIR > sweep.txt
 
@@ -66,16 +71,21 @@ def main(argv: list[str]) -> int:
     from shadems_spark.session import get_spark
 
     spark = get_spark("cli-sweep")
-    lines = []
-    for name, case in CASES.items():
-        d = os.path.join(out, name)
-        # a case's own --xcanvas/--ycanvas come later, so they win
-        argv = [fixture, "--xcanvas", "128", "--ycanvas", "96", *case, "--dir", d]
-        for p in cli.run(argv, spark=spark):
-            lines.append(f"{os.path.relpath(p, out)} {sha256(p)}")
-    print("\n".join(sorted(lines)))
+    passes = []
+    for _ in range(2):
+        lines = []
+        for name, case in CASES.items():
+            d = os.path.join(out, name)
+            # a case's own --xcanvas/--ycanvas come later, so they win
+            argv = [fixture, "--xcanvas", "128", "--ycanvas", "96", *case, "--dir", d]
+            for p in cli.run(argv, spark=spark):
+                lines.append(f"{os.path.relpath(p, out)} {sha256(p)}")
+        passes.append(sorted(lines))
     spark.stop()
-    return 0
+    print("\n".join(passes[0]))
+    for line in sorted(set(passes[0]) ^ set(passes[1])):
+        print(f"second pass differs: {line}", file=sys.stderr)
+    return int(passes[0] != passes[1])
 
 
 if __name__ == "__main__":
