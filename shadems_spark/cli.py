@@ -115,19 +115,23 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _axis(spec: str, default_col: str):
-    """CLI axis spec -> (Column, name). Bare amp/phase/real/imag pick
-    up --col, matching the reference's -x amp + --col DATA pairing."""
-    name = spec.replace(":", "_").replace("/", "over").replace("-", "minus")
+def _axis_spec(spec: str, default_col: str) -> str:
+    """CLI axis spec -> the mapper spec it stands for.  Bare
+    amp/phase/real/imag pick up --col, matching the reference's
+    -x amp + --col DATA pairing."""
     func = spec.rsplit(":", 1)[-1].lower()
     if ":" not in spec and func in _COL_FUNCS:
-        spec = f"{default_col}:{func}"
-    elif ":" in spec:
+        return f"{default_col}:{func}"
+    if ":" in spec:
         col_part, _, f = spec.rpartition(":")
-        spec = f"{col_part}:{f.lower()}"
-    else:
-        spec = spec.lower()
-    return M.parse_axis(spec), name
+        return f"{col_part}:{f.lower()}"
+    return spec.lower()
+
+
+def _axis(spec: str, default_col: str):
+    """CLI axis spec -> (Column, name)."""
+    name = spec.replace(":", "_").replace("/", "over").replace("-", "minus")
+    return M.parse_axis(_axis_spec(spec, default_col)), name
 
 
 def _chunk_partitions(n_rows: int, rows_per_chunk: int) -> int:
@@ -266,9 +270,9 @@ def _categories(df, cat, plots, cnum: int, stamp):
 
 
 def _check(args) -> None:
-    """Reject requests no canvas can draw and selections that do not
-    parse or select nothing, naming the flag, before any Spark job
-    runs."""
+    """Reject requests no canvas can draw, and axis specs and
+    selections that do not parse or select nothing, naming the flag,
+    before any Spark job runs."""
     for flag in ("xcanvas", "ycanvas", "cnum", "nchan"):
         if getattr(args, flag) < 1:
             raise ValueError(f"--{flag} must be at least 1, got {getattr(args, flag)}")
@@ -292,6 +296,16 @@ def _check(args) -> None:
     _baselines(args.baseline)
     if args.chan:
         _chan_slice(args.chan, args.nchan)
+    specs = []
+    for xs, ys, c in _expand_combos(args):
+        specs += [("-x/--xaxis", _axis_spec(xs, c)), ("-y/--yaxis", _axis_spec(ys, c))]
+    if args.aaxis:
+        specs.append(("-a/--aaxis", args.aaxis))
+    for flag, spec in specs:
+        try:
+            M.parse_axis(spec, build=False)
+        except ValueError as e:
+            raise ValueError(f"{flag}: {e}") from None
 
 
 def run(argv: list[str] | None = None, spark=None) -> list[str]:

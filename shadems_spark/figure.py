@@ -12,7 +12,9 @@ swatch legend.  Everything is deterministic: same inputs → identical
 bytes, which the golden-layout test pins.
 
 Driver-side and canvas-bounded like render.py: composition cost
-depends on figure size only, never on data size.
+depends on figure size only, never on data size.  Beside the figure
+itself it allocates nothing canvas-sized: the raster is alpha-blended
+into the panel ``BLEND_ROWS`` rows at a time.
 """
 
 from __future__ import annotations
@@ -167,6 +169,8 @@ def fmt_tick(v: float) -> str:
 #: fixed margins (px) — deterministic layout, pinned by the golden test.
 M_LEFT, M_RIGHT, M_TOP, M_BOTTOM = 64, 84, 24, 36
 TICK_LEN = 4
+#: rows of the raster alpha-blended into the panel at a time
+BLEND_ROWS = 64
 
 _BLACK = (0, 0, 0)
 _GREY = (128, 128, 128)
@@ -199,12 +203,15 @@ def compose_figure(
     fig[:, :, :3] = bgcol
     fig[:, :, 3] = 255
 
-    # raster panel (alpha-over the background)
+    # raster panel (alpha-over the background), a block of rows at a
+    # time: the uint16 temporaries stay BLEND_ROWS tall on any canvas
     panel = fig[M_TOP : M_TOP + rh, M_LEFT : M_LEFT + rw]
-    a = raster[:, :, 3:4].astype(np.uint16)
-    panel[:, :, :3] = (
-        (raster[:, :, :3].astype(np.uint16) * a + panel[:, :, :3] * (255 - a)) // 255
-    ).astype(np.uint8)
+    for r in range(0, rh, BLEND_ROWS):
+        src, dst = raster[r : r + BLEND_ROWS], panel[r : r + BLEND_ROWS]
+        a = src[:, :, 3:4].astype(np.uint16)
+        dst[:, :, :3] = (
+            (src[:, :, :3].astype(np.uint16) * a + dst[:, :, :3] * (255 - a)) // 255
+        ).astype(np.uint8)
 
     # axes box
     x0, y0, x1, y1 = M_LEFT - 1, M_TOP - 1, M_LEFT + rw, M_TOP + rh

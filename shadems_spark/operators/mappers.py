@@ -82,35 +82,40 @@ def baseline_index_sql(n_ant: int = 2048) -> str:
     )
 
 
-def parse_axis(spec: str) -> Column:
+def parse_axis(spec: str, build: bool = True) -> Column | None:
     """Axis-spec grammar: ``[COL[<op>COL2]:]func`` (P2 + B mappers).
 
     Examples: ``amp`` (defaults to DATA), ``DATA:phase``,
     ``DATA-MODEL_DATA:amp``, ``D/M:real``, ``uvdist``, ``time``.
+    ``build=False`` only checks the spec, raising the same ValueError
+    and building no Column, so it needs no live SparkContext.
     """
     col_part, _, func = spec.rpartition(":")
     func = func or "_"
     if func in MAPPERS and not col_part and func not in VIS_COLUMNS:
         fn = MAPPERS[func]
         if fn.__code__.co_argcount == 0:
-            return fn()
+            return fn() if build else None
         col_part = "DATA"
-    base = _parse_col(col_part or "DATA")
+    base = _parse_col(col_part or "DATA", build)
     fn = MAPPERS.get(func)
     if fn is None:
         raise ValueError(f"unknown mapper {func!r} in axis spec {spec!r}")
+    if not build:
+        return None
     return fn(base) if fn.__code__.co_argcount else fn()
 
 
-def _parse_col(col_part: str) -> Column:
+def _parse_col(col_part: str, build: bool = True) -> Column | None:
     for op, cfn in _ARITH.items():
         if op in col_part:
             lhs, rhs = col_part.split(op, 1)
-            return cfn(_parse_col(lhs.strip()), _parse_col(rhs.strip()))
+            lhs, rhs = _parse_col(lhs.strip(), build), _parse_col(rhs.strip(), build)
+            return cfn(lhs, rhs) if build else None
     name = col_part.strip()
     if name not in VIS_COLUMNS:
         raise ValueError(f"unknown visibility column {name!r}")
-    return F.col(VIS_COLUMNS[name])
+    return F.col(VIS_COLUMNS[name]) if build else None
 
 
 def chan_freqs(spark, n_chan: int = 64, f0: float = 1.0e9, df: float = 1.0e6):

@@ -119,7 +119,8 @@ def raster(
     the registry's raster operator, binned as a one-plot
     :func:`grid_raster`, so it shares the CLI's plan.
 
-    Returns the binned table (by, bx[, cat], val), unordered.
+    Returns the binned table (by, bx[, cat], val), unordered; ``by``
+    and ``bx`` are int, as :func:`grid_raster` gives them.
     """
     cols = {"av": value} if value is not None else {}
     keys = ("cat",) if category is not None else ()
@@ -183,7 +184,10 @@ def grid_raster(
     one needs no range.
 
     Returns the binned table (p, *keys, by, bx, val), unordered: its
-    consumer splits it by plot on the driver.
+    consumer splits it by plot on the driver.  ``p``, ``by`` and ``bx``
+    are int (a pixel index of any canvas fits), so a fetched row costs
+    20 bytes of Arrow (with a long ``val``), not 28; ``val`` is long for
+    count, else the reduction's type.
     """
     n = max(ranges, default=-1) + 1
 
@@ -211,6 +215,6 @@ def grid_raster(
     )
     return binned.select(
         F.expr(f"cast(pix div {width * height} as int)").alias("p"), *keys,
-        F.expr(f"pix div {width} % {height}").alias("by"),
-        (F.col("pix") % width).alias("bx"), "val",
+        F.expr(f"cast(pix div {width} % {height} as int)").alias("by"),
+        F.expr(f"cast(pix % {width} as int)").alias("bx"), "val",
     )

@@ -45,6 +45,7 @@ def build_parser() -> argparse.ArgumentParser:
 def run(argv: list[str] | None = None) -> dict:
     from shadems_spark.catalog import load_table
     from shadems_spark.operators.curation import gopher_rules, pack_sequences
+    from shadems_spark.operators.dedup import release_persist
     from shadems_spark.operators.retrieval import stratified_split
     from shadems_spark.session import get_spark
 
@@ -85,14 +86,13 @@ def run(argv: list[str] | None = None) -> dict:
             .drop("__keep")
         )
     elif args.dedup == "minhash":
-        from shadems_spark.operators.dedup import minhash_dedup, release_persist
+        from shadems_spark.operators.dedup import minhash_dedup
 
         # fuzzy pairs -> drop the higher id of every near-dup pair
         # (the conservative pairwise rule, as in semdedup)
         pairs = minhash_dedup(docs, threshold=0.2)
         drop = pairs.select(F.col("id2").alias("doc_id")).distinct()
         g = g.join(drop, "doc_id", "left_anti")
-        release_persist("minhash_grams")
     elif args.dedup == "semantic":
         from shadems_spark.operators.similarity import semdedup
 
@@ -108,37 +108,43 @@ def run(argv: list[str] | None = None) -> dict:
         )
         g = g.join(dropped, "doc_id", "left_anti")
 
-    g = g.observe(obs_gate, F.count(F.lit(1)).alias("n"))
-    s = stratified_split(g, train_pct=args.train_pct, val_pct=args.val_pct)
-    s.write.mode("overwrite").partitionBy("split").parquet(args.out_dir)
-    n_in = obs_in.get["n"]
-    n_curated = obs_gate.get["n"]
+    try:
+        g = g.observe(obs_gate, F.count(F.lit(1)).alias("n"))
+        s = stratified_split(g, train_pct=args.train_pct, val_pct=args.val_pct)
+        s.write.mode("overwrite").partitionBy("split").parquet(args.out_dir)
+        n_in = obs_in.get["n"]
+        n_curated = obs_gate.get["n"]
 
-    out = spark.read.parquet(args.out_dir)
-    stats = {
-        r["split"]: (r["n"], r["tok"])
-        for r in out.groupBy("split")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum("n_words").cast("long").alias("tok"))
-        .collect()
-    }
-    report = {
-        "input_docs": n_in,
-        "curated_docs": n_curated,
-        "splits": {k: {"docs": n, "tokens": t} for k, (n, t) in sorted(stats.items())},
-        "dedup": args.dedup,
-        "out": args.out_dir,
-    }
-    if args.pack:
-        packed = pack_sequences(
-            out.filter(F.col("split") == "train"),
-            budget=args.pack,
-            token_col="n_words",
-        )
-        report["train_sequences"] = (
-            packed.select("lang", "pack_id").distinct().count()
-        )
-    return report
+        out = spark.read.parquet(args.out_dir)
+        stats = {
+            r["split"]: (r["n"], r["tok"])
+            for r in out.groupBy("split")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.sum("n_words").cast("long").alias("tok"))
+            .collect()
+        }
+        report = {
+            "input_docs": n_in,
+            "curated_docs": n_curated,
+            "splits": {k: {"docs": n, "tokens": t} for k, (n, t) in sorted(stats.items())},
+            "dedup": args.dedup,
+            "out": args.out_dir,
+        }
+        if args.pack:
+            packed = pack_sequences(
+                out.filter(F.col("split") == "train"),
+                budget=args.pack,
+                token_col="n_words",
+            )
+            report["train_sequences"] = (
+                packed.select("lang", "pack_id").distinct().count()
+            )
+        return report
+    finally:
+        if args.dedup == "minhash":
+            # every read of the lazy dedup plan (the write's) goes
+            # through the cached gram table: released after the last action
+            release_persist("minhash_grams")
 
 
 if __name__ == "__main__":

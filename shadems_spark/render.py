@@ -16,12 +16,23 @@ works in any executor-less driver environment.
 Scale note: fetching the table to the driver is safe at any input
 scale because the binned table's size is bounded by the canvas, not
 the data.
+
+Memory: the fetched table arrives narrow (int ``p``/``by``/``bx``) and
+each plot's data is held once between the fetch and the PNG.  The
+numpy columns are views of the Arrow buffers where the types allow
+(``by``/``bx`` are widened to int64, ``val`` to float64); a table
+without a null value is not filtered, a table of one plot is not
+split, and the plots of a grid or facet table are gathered one at a
+time.  A continuous raster is coloured a block of pixels at a time,
+and the PNG rows stream through one compressor, so no raw copy of the
+image is built.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
+from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -187,6 +198,10 @@ def parse_color(name: str) -> tuple[int, int, int]:
     return _COLORS[name.lower()]
 
 
+#: pixels coloured at a time by :func:`raster_to_rgba`
+_BLOCK = 1 << 16
+
+
 def raster_to_rgba(
     pix, width: int, height: int, cmap: str = "viridis", categories: list | None = None,
     bgcol: tuple[int, int, int] | None = None,
@@ -207,14 +222,20 @@ def raster_to_rgba(
         # background instead of transparency.
         img[:, :, :3] = bgcol
         img[:, :, 3] = 255
-    row, col = height - 1 - np.asarray(pix["by"]), np.asarray(pix["bx"])
+    by, col = np.asarray(pix["by"]), np.asarray(pix["bx"])
     shade = np.asarray(pix["shade"], dtype=np.float64)
     if not len(shade):
         return img
     if categories is None:
-        img[row, col, :3] = lut(cmap)[np.minimum(255, (shade * 255.0).astype(np.int64))]
-        img[row, col, 3] = 255
+        # by indexes the flipped view; LUT indices are made a block of
+        # pixels at a time, so no temporary spans the table
+        top, colors = img[::-1], lut(cmap)
+        for i in range(0, len(shade), _BLOCK):
+            b = slice(i, i + _BLOCK)
+            top[by[b], col[b], :3] = colors[np.minimum(255, (shade[b] * 255.0).astype(np.int64))]
+            top[by[b], col[b], 3] = 255
         return img
+    row = height - 1 - by
     cats, inv = np.unique(pix["cat"], return_inverse=True)
     palette = np.array(PALETTE, dtype=np.float64)
     color = palette[[categories.index(c) % len(PALETTE) for c in cats]][inv]
@@ -233,41 +254,61 @@ def raster_to_rgba(
 
 
 def write_png(path: str, rgba: np.ndarray) -> None:
-    """Minimal RGBA PNG encoder (stdlib zlib; filter type 0 rows)."""
+    """Minimal RGBA PNG encoder (stdlib zlib; filter type 0 rows).  The
+    rows stream through one compressor, so no raw copy of the image is
+    built; the IDAT bytes equal ``zlib.compress`` of the whole raw
+    buffer at level 6."""
     h, w = rgba.shape[:2]
-    raw = b"".join(b"\x00" + rgba[y].tobytes() for y in range(h))
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + tag
-            + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
+    z = zlib.compressobj(6)
+    idat = b"".join(z.compress(b"\x00" + row.tobytes()) for row in rgba) + z.flush()
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 6, 0, 0, 0)
-    payload = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw, 6))
-        + chunk(b"IEND", b"")
-    )
     with open(path, "wb") as f:
-        f.write(payload)
+        f.write(b"\x89PNG\r\n\x1a\n")
+        for tag, data in ((b"IHDR", ihdr), (b"IDAT", idat), (b"IEND", b"")):
+            f.write(struct.pack(">I", len(data)) + tag)
+            f.write(data)
+            f.write(struct.pack(">I", zlib.crc32(data, zlib.crc32(tag)) & 0xFFFFFFFF))
 
 
 def _columns(table: pa.Table) -> dict[str, np.ndarray]:
     """The fetched binned table -> one numpy array per column, in the
     table's row order.  Rows whose value is null (a reduction over null
-    samples only) have nothing to shade and are dropped; string columns
-    (a facet group ``p``, the colour ``cat``) become numpy str arrays."""
-    table = table.filter(pc.is_valid(table["val"]))
+    samples only) have nothing to shade and are dropped; a table without
+    one is not copied for it.  String columns (a facet group ``p``, the
+    colour ``cat``) become numpy str arrays, ``val`` float64, and the
+    int pixel indices ``by``/``bx`` int64, so ``row * width + col`` cannot
+    wrap on a canvas of more than 2**31 pixels."""
+    if table["val"].null_count:
+        table = table.filter(pc.is_valid(table["val"]))
     cols = {}
     for name, col in zip(table.column_names, table.columns):
         a = col.to_numpy()
         cols[name] = a.astype(str) if pa.types.is_string(col.type) else a
-    cols["val"] = cols["val"].astype(np.float64)
+    cols["val"] = cols["val"].astype(np.float64, copy=False)
+    for name in ("by", "bx"):
+        cols[name] = cols[name].astype(np.int64, copy=False)
     return cols
+
+
+def _split(cols: dict[str, np.ndarray], path) -> Iterator[tuple]:
+    """(group, columns) per plot of a table with a plot group column
+    ``p``: each key of a {group: path} dict, also one with no pixels,
+    or each group present.  A table of one group yields its columns as
+    they are; with several, a group's rows are gathered when its turn
+    comes, so one group's copy is alive at a time.  Rows keep their
+    table order within a group."""
+    p = cols.pop("p", np.zeros(0))
+    keys = np.unique(p)
+    if len(keys) == 1:
+        rows = {keys[0]: slice(None)}
+    else:
+        order = np.argsort(p, kind="stable")
+        starts = np.searchsorted(p, keys, sorter=order)
+        rows = {k: order[a:b] for k, a, b in zip(keys, starts, [*starts[1:], len(p)])}
+    del p
+    for g in path if isinstance(path, dict) else keys:
+        idx = rows.get(g, slice(0, 0))
+        yield g, {n: v[idx] for n, v in cols.items()}
 
 
 def _at(arg, group):
@@ -288,19 +329,8 @@ def _rasters(table, path, width, height, how, cmap, categories, spread_px, dynsp
     {group: path} dict, which draws every key, also one with no pixels,
     or a function of the group, which draws each group present."""
     cols = _columns(table)
-    if isinstance(path, str):
-        plots = {None: cols}
-    else:
-        p = cols.pop("p", np.zeros(0))
-        order = np.argsort(p, kind="stable")
-        keys, starts = np.unique(p[order], return_index=True)
-        found = {
-            k: {n: v[idx] for n, v in cols.items()}
-            for k, idx in zip(keys, np.split(order, starts[1:]))
-        }
-        empty = {n: v[:0] for n, v in cols.items()}
-        plots = {g: found.get(g, empty) for g in (path if isinstance(path, dict) else keys)}
-    for g, pix in plots.items():
+    plots = [(None, cols)] if isinstance(path, str) else _split(cols, path)
+    for g, pix in plots:
         if dynspread_threshold is not None:
             pix = dynspread(pix, width, height, threshold=dynspread_threshold)
         elif spread_px:

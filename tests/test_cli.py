@@ -703,6 +703,9 @@ def test_cli_lone_agg_limit(tmp_path, spark, sf_dir):
         (["-C", "no_such_column"], "--colour-by"),
         # 3.6 TiB of RGBA, more than any machine: refused, not allocated
         (["--xcanvas", "1000000", "--ycanvas", "1000000"], "--xcanvas"),
+        (["-x", "bogus"], "-x"),
+        (["-y", "DATA:bogus"], "-y"),
+        (["-a", "bogus"], "-a"),
     ],
 )
 def test_cli_bad_input_names_flag(tmp_path, spark, sf_dir, argv, flag):
@@ -792,21 +795,63 @@ def test_render_string_groups_sorted(tmp_path, spark):
 
 
 def test_render_allocation_bound(tmp_path, spark):
-    """The renderer fetches the binned table as columns: a ~300k-pixel
-    1280x900 table (one row per pixel) renders in ~23 MB of Python
-    allocation, where one object per row took ~110 MB."""
+    """The renderer holds a plot's fetched columns once: a ~300k-pixel
+    1280x900 table (one row per pixel) renders in ~15 MB of Python
+    allocation as a bare canvas and ~20 MB as a figure, where a filter
+    copy of the table, canvas-sized index and blend temporaries and the
+    raw PNG buffer took ~18 MB and ~32 MB."""
     import tracemalloc
+
+    from shadems_spark.render import render_figure
 
     binned = spark.range(300_000).selectExpr(
         "cast(id div 1280 as int) as by", "cast(id % 1280 as int) as bx", "id % 97 + 1 as val",
-    )
-    tracemalloc.start()
-    try:
-        render_png(binned.toArrow(), str(tmp_path / "dense.png"), 1280, 900)
-        peak = tracemalloc.get_traced_memory()[1]
-    finally:
-        tracemalloc.stop()
-    assert peak < 60 * 2**20, peak
+    ).toArrow()
+    out = str(tmp_path / "dense.png")
+    for render, bound_mb in (
+        (lambda: render_png(binned, out, 1280, 900), 16),
+        (lambda: render_figure(binned, out, 1280, 900, (0.0, 1.0), (0.0, 1.0)), 25),
+    ):
+        tracemalloc.start()
+        try:
+            render()
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < bound_mb * 2**20, (bound_mb, peak)
+
+
+def test_write_png_streams_one_shot_idat(tmp_path):
+    """write_png streams its rows through one compressor: the IDAT is
+    byte-identical to compressing the whole filter-0 buffer at once."""
+    rgba = np.random.default_rng(0).integers(0, 256, (97, 131, 4), dtype=np.uint8)
+    rgba[20:60, 30:90] = (1, 2, 3, 255)  # a run the encoder matches across rows
+    p = str(tmp_path / "r.png")
+    write_png(p, rgba)
+    raw = b"".join(b"\x00" + rgba[y].tobytes() for y in range(rgba.shape[0]))
+    data = open(p, "rb").read()
+    idat_len = struct.unpack(">I", data[33:37])[0]
+    assert data[37:41] == b"IDAT"
+    assert data[41 : 41 + idat_len] == zlib.compress(raw, 6)
+    assert data[41 + idat_len + 4 :] == b"\x00\x00\x00\x00IEND\xaeB`\x82"
+
+
+def test_columns_widen_int_pixel_indices():
+    """The binned table's int by/bx become int64 arrays, so a flat
+    pixel index row * width + col cannot wrap in int32."""
+    import pyarrow as pa
+
+    from shadems_spark.render import _columns
+
+    table = pa.table({
+        "by": pa.array([0, 50_000], pa.int32()), "bx": pa.array([1, 2], pa.int32()),
+        "val": pa.array([1, 2], pa.int64()),
+    })
+    cols = _columns(table)
+    assert cols["by"].dtype == np.int64 and cols["bx"].dtype == np.int64
+    assert cols["val"].dtype == np.float64
+    # a 50001-wide canvas: the second index is past 2**31
+    assert (cols["by"] * 50_001 + cols["bx"]).tolist() == [1, 50_000 * 50_001 + 2]
 
 
 def _jobs_of(spark, group, fn):

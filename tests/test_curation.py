@@ -1060,3 +1060,27 @@ def test_dp_mean_mechanism_replay_and_utility(spark, sf_dir):
         if r["dp_mean"] is not None and n > 10:
             worst = (10 * _DPM_CLAMP + 10 * csum / n) / (n - 10)
             assert abs(r["dp_mean"] - csum / n) <= worst + 1e-6
+
+
+def test_pipeline_minhash_write_reads_cached_grams(spark, sf_dir, tmp_path, monkeypatch):
+    """The minhash curation run keeps its gram table cached until its
+    last action: the split write reads the grams from the cache instead
+    of re-deriving the shingle explode from the documents scan for each
+    consumer, and the cache is released when the run returns."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from shadems_spark.operators import dedup
+    from shadems_spark.pipeline import run
+
+    plans = []
+    parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    run([sf_dir, str(tmp_path / "out"), "--dedup", "minhash"])
+    [plan] = plans
+    assert "InMemoryTableScan" in plan, plan
+    assert "minhash_grams" not in dedup._live

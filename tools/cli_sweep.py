@@ -46,6 +46,10 @@ CASES = {
     "iter_field_flag": ["-x", "time", "-y", "amp", "--iter-field", "--png", "{xname}_{yname}{field}.png"],
     "figure": ["-x", "time", "-y", "amp", "--figure"],
     "figure_colour": ["-x", "time", "-y", "amp", "-C", "corr_label", "--figure"],
+    # partial alphas blended across many of compose_figure's row blocks
+    "figure_colour_large": [
+        "-x", "time", "-y", "amp", "-C", "corr_label", "--figure", "--xcanvas", "1280", "--ycanvas", "900",
+    ],
     "spread": ["-x", "uvdist", "-y", "amp", "--spread", "1"],
     "dynspread": ["-x", "u", "-y", "v", "--dynspread"],
     **{f"ared_{r}": ["-x", "time", "-y", "amp", "--ared", r, "-a", "DATA:real"] for r in ("mean", "std")},
