@@ -349,8 +349,9 @@ def run(argv: list[str] | None = None, spark=None) -> list[str]:
     if not ranges:
         raise ValueError("no sample survived the selection")
     binned = R.grid_raster(
-        samples, ranges, args.xcanvas, args.ycanvas, reduction=args.ared or "count",
-        value=F.col("av") if args.aaxis else None, keys=tuple(k for k in ("f", "cat") if k in cols),
+        samples, ranges, args.xcanvas, args.ycanvas,
+        aggs={"val": R.REDUCTIONS[args.ared or "count"](F.col("av") if args.aaxis else None)},
+        keys=tuple(k for k in ("f", "cat") if k in cols),
     )
 
     ms_name = os.path.basename(os.path.normpath(args.ms))

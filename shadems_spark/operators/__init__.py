@@ -1,12 +1,1 @@
 """Relational + raster + extension operators (SURVEY.md §2)."""
-
-
-class OperatorRefusal(ValueError):
-    """A deliberate bounded-resource refusal (e.g. salted_join's
-    replicated-dim budget): the operator declines work whose cost
-    would exceed a declared budget and points at the alternative.
-
-    Subclasses ValueError so existing callers/tests that catch
-    ValueError keep working, while probes (tools/scale_probe.py
-    --joins) can archive ONLY genuine refusals as scale evidence and
-    re-raise every other ValueError as a regression (ADVICE r10)."""

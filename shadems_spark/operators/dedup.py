@@ -314,10 +314,9 @@ def minhash_dedup(
     grams = tracked_persist(
         doc_grams(df, id_col, text, family=family), key="minhash_grams"
     )
-    # the banding self-join consumes sigs twice, but A/B measured an
-    # explicit sigs persist as warm-equal and bench-cold SLOWER —
+    # the banding self-join consumes sigs twice without a persist:
     # ReuseExchange dedups the identical signature aggregate across
-    # the join sides (see the rule in q_tfidf / BASELINE.md).
+    # the join sides (see the rule in q_tfidf).
     sigs = minhash_signatures_from_grams(grams, id_col, family=family)
     cands = lsh_candidate_pairs(sigs, id_col, family=family)
     return jaccard_verify(cands, grams, id_col, threshold)

@@ -111,26 +111,26 @@ def raster(
     y_range: tuple[float, float],
     width: int,
     height: int,
-    reduction: str = "count",
-    value: Column | None = None,
+    aggs: dict[str, Column] | None = None,
     category: Column | None = None,
 ) -> DataFrame:
     """G1-G5: the canvas aggregation of one plot with fixed ranges —
     the registry's raster operator, binned as a one-plot
-    :func:`grid_raster`, so it shares the CLI's plan.
+    :func:`grid_raster`, so it shares the CLI's plan.  ``aggs``
+    ({name: aggregate}, default ``{"val": count}``) are over the
+    columns of ``df``, which ride along with every sample.
 
-    Returns the binned table (by, bx[, cat], val), unordered; ``by``
+    Returns the binned table (by, bx[, cat], *aggs), unordered; ``by``
     and ``bx`` are int, as :func:`grid_raster` gives them.
     """
-    cols = {"av": value} if value is not None else {}
+    cols = {c: df[c] for c in df.columns}
     keys = ("cat",) if category is not None else ()
     if category is not None:
         cols["cat"] = category
     samples = grid_samples(df, [(x, y, False)], cols)
     return grid_raster(
-        samples, {0: (x_range, y_range)}, width, height, reduction=reduction,
-        value=F.col("av") if value is not None else None, keys=keys,
-    ).select("by", "bx", *keys, "val")
+        samples, {0: (x_range, y_range)}, width, height, aggs=aggs, keys=keys,
+    ).select("by", "bx", *keys, *(aggs or ("val",)))
 
 
 def grid_samples(
@@ -171,8 +171,7 @@ def grid_raster(
     ranges: dict[int, tuple[tuple[float, float], tuple[float, float]]],
     width: int,
     height: int,
-    reduction: str = "count",
-    value: Column | None = None,
+    aggs: dict[str, Column] | None = None,
     keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """The canvas aggregation of every plot of a :func:`grid_samples`
@@ -181,14 +180,16 @@ def grid_raster(
     arrays, so the plan scans the source once whatever the grid size
     and the shuffle stays ≤ N·W·H·|keys| rows.  ``ranges`` holds
     every plot that has a sample (``ShadePlot.bounds``); a plot without
-    one needs no range.
+    one needs no range.  ``aggs`` ({name: aggregate over the sample
+    columns}, default ``{"val": count}``, see :data:`REDUCTIONS`) are
+    the per-pixel columns.
 
-    Returns the binned table (p, *keys, by, bx, val), unordered: its
+    Returns the binned table (p, *keys, by, bx, *aggs), unordered: its
     consumer splits it by plot on the driver.  ``p``, ``by`` and ``bx``
     are int (a pixel index of any canvas fits), so a fetched row costs
-    20 bytes of Arrow (with a long ``val``), not 28; ``val`` is long for
-    count, else the reduction's type.
+    20 bytes of Arrow (with a long count ``val``), not 28.
     """
+    aggs = aggs or {"val": REDUCTIONS["count"](None)}
     n = max(ranges, default=-1) + 1
 
     def lits(axis: int, end: int) -> Column:
@@ -211,10 +212,10 @@ def grid_raster(
             F.col("xv").between(xlo, xhi) & F.col("yv").between(ylo, yhi)
         )
         .groupBy(pix.alias("pix"), *keys)
-        .agg(REDUCTIONS[reduction](value).alias("val"))
+        .agg(*(a.alias(name) for name, a in aggs.items()))
     )
     return binned.select(
         F.expr(f"cast(pix div {width * height} as int)").alias("p"), *keys,
         F.expr(f"cast(pix div {width} % {height} as int)").alias("by"),
-        F.expr(f"cast(pix % {width} as int)").alias("bx"), "val",
+        F.expr(f"cast(pix % {width} as int)").alias("bx"), *aggs,
     )

@@ -113,9 +113,7 @@ def salted_join(
     if max_replicated_bytes is not None:
         est = _plan_size_bytes(dim)
         if est is not None and est * n_salt > max_replicated_bytes:
-            from shadems_spark.operators import OperatorRefusal
-
-            raise OperatorRefusal(
+            raise ValueError(
                 f"salted_join would replicate a ~{est / 1e6:.0f} MB dim "
                 f"x{n_salt} (~{est * n_salt / 1e6:.0f} MB > "
                 f"{max_replicated_bytes / 1e6:.0f} MB limit); enumerate the "

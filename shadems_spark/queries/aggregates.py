@@ -5,7 +5,6 @@ distincts, top-k, set ops.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from shadems_spark.catalog import load_table
@@ -30,7 +29,7 @@ def _vis(spark, sf_dir):
     return vis_view(load_table(spark, sf_dir, "lineitem"))
 
 
-def _raster(spark, sf_dir, reduction, value=None, category=None):
+def _raster(spark, sf_dir, aggs=None, category=None):
     return R.raster(
         _vis(spark, sf_dir),
         F.col("time_day").cast("double"),
@@ -39,10 +38,14 @@ def _raster(spark, sf_dir, reduction, value=None, category=None):
         PRICE_RANGE,
         64,
         64,
-        reduction=reduction,
-        value=value,
+        aggs=aggs,
         category=category,
     )
+
+
+def _amp_raster(spark, sf_dir, reduction):
+    """The raster of one reduction over the visibility amplitude."""
+    return _raster(spark, sf_dir, {"val": R.REDUCTIONS[reduction](c_amp(F.col("vis")))})
 
 
 @register(
@@ -56,7 +59,7 @@ def q_raster_count_cat(spark, sf_dir):
     """G3: count-by-category (--colour-by) — datashader count_cat as
     groupBy(bx, by, cat); the category key multiplies the shuffle by
     ncat only."""
-    return _raster(spark, sf_dir, "count", category=F.col("corr_label"))
+    return _raster(spark, sf_dir, category=F.col("corr_label"))
 
 
 @register(
@@ -70,8 +73,7 @@ def q_raster_count_cat(spark, sf_dir):
 )
 def q_raster_mean(spark, sf_dir):
     """G4: mean raster (--aaxis amp --ared mean)."""
-    out = _raster(spark, sf_dir, "mean", value=c_amp(F.col("vis")))
-    return out.withColumn("val", F.round("val", 2))
+    return _amp_raster(spark, sf_dir, "mean").withColumn("val", F.round("val", 2))
 
 
 @register(
@@ -85,8 +87,7 @@ def q_raster_mean(spark, sf_dir):
 )
 def q_raster_sum(spark, sf_dir):
     """G5: sum raster."""
-    out = _raster(spark, sf_dir, "sum", value=c_amp(F.col("vis")))
-    return out.withColumn("val", F.round("val", 2))
+    return _amp_raster(spark, sf_dir, "sum").withColumn("val", F.round("val", 2))
 
 
 @register(
@@ -98,7 +99,7 @@ def q_raster_sum(spark, sf_dir):
 )
 def q_raster_min(spark, sf_dir):
     """G5: min raster (exact — min/max of identical IEEE values)."""
-    return _raster(spark, sf_dir, "min", value=c_amp(F.col("vis")))
+    return _amp_raster(spark, sf_dir, "min")
 
 
 @register(
@@ -110,7 +111,7 @@ def q_raster_min(spark, sf_dir):
 )
 def q_raster_max(spark, sf_dir):
     """G5: max raster."""
-    return _raster(spark, sf_dir, "max", value=c_amp(F.col("vis")))
+    return _amp_raster(spark, sf_dir, "max")
 
 
 @register(
@@ -124,20 +125,11 @@ def q_raster_max(spark, sf_dir):
 )
 def q_raster_std(spark, sf_dir):
     """G5: std raster — datashader std is population std."""
-    v = _vis(spark, sf_dir)
-    x, y = F.col("time_day").cast("double"), F.col("vis.re")
-    binned = (
-        R.clip(R.clip(v, x, *TIME_RANGE), y, *PRICE_RANGE)
-        .withColumn("bx", R.bin_axis(x, *TIME_RANGE, 64))
-        .withColumn("by", R.bin_axis(y, *PRICE_RANGE, 64))
-    )
-    return (
-        binned.groupBy("by", "bx")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.stddev_pop(c_amp(F.col("vis"))), 2).alias("val"),
-        )
-    )
+    amp = c_amp(F.col("vis"))
+    return _raster(spark, sf_dir, {
+        "n": R.REDUCTIONS["count"](None),
+        "val": F.round(R.REDUCTIONS["std"](amp), 2),
+    })
 
 
 @register(
@@ -155,19 +147,12 @@ def q_raster_var(spark, sf_dir):
     """G5 (r4): var + any rasters — completes datashader's order-free
     reduction set (first/last/mode are order-dependent and therefore
     undefined over a distributed scan; excluded by design)."""
-    v = _vis(spark, sf_dir)
-    x, y = F.col("time_day").cast("double"), F.col("vis.re")
-    binned = (
-        R.clip(R.clip(v, x, *TIME_RANGE), y, *PRICE_RANGE)
-        .withColumn("bx", R.bin_axis(x, *TIME_RANGE, 64))
-        .withColumn("by", R.bin_axis(y, *PRICE_RANGE, 64))
-    )
     amp = c_amp(F.col("vis"))
-    return binned.groupBy("by", "bx").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(R.REDUCTIONS["var"](amp), 2).alias("val"),
-        R.REDUCTIONS["any"](amp).cast("int").alias("anyv"),
-    )
+    return _raster(spark, sf_dir, {
+        "n": R.REDUCTIONS["count"](None),
+        "val": F.round(R.REDUCTIONS["var"](amp), 2),
+        "anyv": R.REDUCTIONS["any"](amp).cast("int"),
+    })
 
 
 @register(
@@ -381,8 +366,7 @@ def q_sort(spark, sf_dir):
 def q_topk(spark, sf_dir):
     """O3: top-k brightest pixels — orderBy+limit compiles to
     TakeOrderedAndProject (per-partition heaps, no full sort)."""
-    out = _raster(spark, sf_dir, "count")
-    return out.orderBy(F.col("val").desc(), "by", "bx").limit(10)
+    return _raster(spark, sf_dir).orderBy(F.col("val").desc(), "by", "bx").limit(10)
 
 
 @register(

@@ -166,7 +166,6 @@ def q_raster_count(spark, sf_dir):
         PRICE_RANGE,
         128,
         128,
-        reduction="count",
     )
 
 
@@ -212,19 +211,8 @@ def q_zorder(spark, sf_dir):
     on both engines; locality superiority over row-major order is
     pinned in tests.  Writing `sortWithinPartitions(zkey)` before a
     compacted write is the deployment shape (sources/io.py)."""
-    from shadems_spark.vis import vis_view
-
     v = vis_view(load_table(spark, sf_dir, "lineitem"))
-    bx = R.bin_axis(F.col("time_day").cast("double"), *TIME_RANGE, 16)
-    by = R.bin_axis(F.col("vis.re"), *PRICE_RANGE, 16)
-    b = (
-        v.filter(
-            F.col("time_day").cast("double").between(*TIME_RANGE)
-            & F.col("vis.re").between(*PRICE_RANGE)
-        )
-        .groupBy(bx.alias("bx"), by.alias("by"))
-        .agg(F.count(F.lit(1)).alias("val"))
-    )
+    b = R.raster(v, F.col("time_day").cast("double"), F.col("vis.re"), TIME_RANGE, PRICE_RANGE, 16, 16)
     zkey = None
     for i in range(4):
         for c, off in (("bx", 0), ("by", 1)):

@@ -97,7 +97,7 @@ def get_spark(app_name: str = "shadems-spark", master: str | None = None) -> Spa
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         # UI off by default (headless gates); SPARK_GRAFT_UI=true turns
         # on the REST /api/v1 jobs endpoint for per-job wall attribution
-        # (tools/qbench.py, bench.py --jobs — VERDICT r8 #3).
+        # (perfbench/run.py --trace 1).
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -70,6 +70,41 @@ def test_raster_count_conservation(spark, sf_dir):
     assert agg["max(bx)"] <= 63 and agg["max(by)"] <= 63
 
 
+def test_grid_raster_named_aggregates(spark):
+    """grid_raster carries several named per-pixel aggregates in its one
+    groupBy: count and population std per (plot, pixel), recounted in
+    numpy with the datashader bin formula."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    n, w, h = 400, 8, 6
+    p = rng.integers(0, 2, n)
+    xv, yv, av = rng.uniform(-1.0, 11.0, n), rng.uniform(0.0, 5.0, n), rng.normal(3.0, 2.0, n)
+    samples = spark.createDataFrame(
+        list(zip(p.tolist(), xv.tolist(), yv.tolist(), av.tolist())),
+        "p int, xv double, yv double, av double",
+    )
+    ranges = {0: ((0.0, 10.0), (0.0, 5.0)), 1: ((2.0, 8.0), (1.0, 4.0))}
+    binned = R.grid_raster(
+        samples, ranges, w, h,
+        aggs={"n": R.REDUCTIONS["count"](None), "val": R.REDUCTIONS["std"](F.col("av"))},
+    )
+    assert binned.columns == ["p", "by", "bx", "n", "val"]
+    got = {(r.p, r.by, r.bx): (r.n, r.val) for r in binned.collect()}
+
+    want: dict[tuple[int, int, int], list[float]] = {}
+    for pi, x, y, a in zip(p, xv, yv, av):
+        (xlo, xhi), (ylo, yhi) = ranges[pi]
+        if xlo <= x <= xhi and ylo <= y <= yhi:
+            bx = min(w - 1, math.floor((x - xlo) / (xhi - xlo) * w))
+            by = min(h - 1, math.floor((y - ylo) / (yhi - ylo) * h))
+            want.setdefault((int(pi), by, bx), []).append(a)
+    assert got.keys() == want.keys()
+    for k, vals in want.items():
+        assert got[k][0] == len(vals)
+        assert got[k][1] == pytest.approx(float(np.std(vals)), abs=1e-12)
+
+
 def test_shadeplot_autobounds(spark, sf_dir):
     v = vis_view(load_table(spark, sf_dir, "lineitem"))
     plot = ShadePlot(x=F.col("time_day").cast("double"), y=C.c_amp(F.col("vis")), width=32, height=32)

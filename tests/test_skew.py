@@ -172,8 +172,9 @@ def test_aqe_splits_skewed_join_at_runtime(spark):
 
 def test_salted_join_guards_replicated_dim_size(spark, tmp_path):
     """salted_join must refuse to replicate a dim whose x n_salt
-    footprint exceeds the documented ceiling (VERDICT r7 #3), pointing
-    at skew_split_join; max_replicated_bytes=None opts out."""
+    footprint exceeds the documented ceiling (VERDICT r7 #3) with a
+    plain ValueError pointing at skew_split_join;
+    max_replicated_bytes=None opts out."""
     import pytest
 
     fact = _skewed(spark)
@@ -186,8 +187,9 @@ def test_salted_join_guards_replicated_dim_size(spark, tmp_path):
 
     est = _plan_size_bytes(dim)
     assert est is not None and est > 0  # estimate exists for parquet scans
-    with pytest.raises(ValueError, match="skew_split_join"):
+    with pytest.raises(ValueError, match="skew_split_join") as refused:
         salted_join(fact, dim, "k", n_salt=8, max_replicated_bytes=est)
+    assert type(refused.value) is ValueError  # a plain refusal, no subclass
     # under the ceiling -> builds; explicit opt-out -> builds
     assert salted_join(fact, dim, "k", n_salt=8).count() > 0
     assert (
