@@ -58,8 +58,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the normal Spark pattern).  The :func:`table_stamp` key drops the
     cache when a writer adds, removes or rewrites a file, also in
     place; ``memo`` scopes it to the live SparkContext, so a ``stop()``
-    and a new session in the same process read the table afresh;
-    ``SHADEMS_NO_EXPR_MEMO=1`` disables it for A/B.
+    and a new session in the same process read the table afresh.
     """
     tune(spark)
     path = _table_path(sf_dir, name)

@@ -72,29 +72,15 @@ def doc_grams(
     ``family``: "xx" = xxhash64 64-bit grams (native, default);
     "xe" = cross-engine poly grams (text.ngram_hashes_xe) so a DuckDB
     oracle can replay gram identity."""
-    import os
+    from shadems_spark.operators.text import doc_grams_fused
 
-    from shadems_spark.operators.text import (
-        doc_grams_fused,
-        xe_gram_hashes_arrow,
-    )
-
-    if (
-        family == "xe"
-        and os.environ.get("SHADEMS_XE_GRAM_IMPL") not in ("loop", "numpy")
-        and os.environ.get("SHADEMS_GRAM_FUSE") != "0"
-    ):
+    if family == "xe":
         # fused form (r12, VERDICT r11 #5): the explode happens inside
-        # the Arrow batch body — one fewer Generate per consumer.  The
-        # loop/numpy A/B impls keep the array+explode form so the
-        # differential pins exercise the same shape they always did.
+        # the Arrow batch body — one fewer Generate per consumer.
         return doc_grams_fused(df, id_col, text, ngram, "xe")
-    gram_arr = (
-        xe_gram_hashes_arrow(text, ngram)
-        if family == "xe"
-        else ngram_hashes(words(text), ngram)
+    return df.select(
+        id_col, F.explode(ngram_hashes(words(text), ngram)).alias("s")
     )
-    return df.select(id_col, F.explode(gram_arr).alias("s"))
 
 
 def minhash_signatures(

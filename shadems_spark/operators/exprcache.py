@@ -25,13 +25,10 @@ CLI's Spark actions (row count, categories, bounds, the binned table)
 per plan, action and input-file stamp, within a byte budget: a request
 that only re-styles an earlier binning runs no Spark job.  Both caches
 follow the live SparkContext.
-
-``SHADEMS_NO_EXPR_MEMO=1`` disables both (A/B measurement).
 """
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
 
 _CACHE: dict = {}
@@ -55,12 +52,6 @@ _MAX_ENTRIES = 8192
 _OWNER_TOKEN: object | None = None
 
 
-def _disabled() -> bool:
-    # explicit truthy parse (ADVICE r11): SHADEMS_NO_EXPR_MEMO=0 must
-    # NOT disable memoization just by being set.
-    return os.environ.get("SHADEMS_NO_EXPR_MEMO", "").lower() in ("1", "true", "yes")
-
-
 def _own_context() -> None:
     """Drop every entry of both caches when the live SparkContext is
     not the one they were made under."""
@@ -81,8 +72,6 @@ def _own_context() -> None:
 
 def memo(key: tuple, build):
     """Return ``build()`` cached under ``key`` (+ the live SparkContext)."""
-    if _disabled():  # A/B gate
-        return build()
     _own_context()
     col = _CACHE.get(key)
     if col is None:
@@ -121,8 +110,6 @@ def memo_result(df, action: str, stamp, run):
     failed action raises and is not kept; a result over the byte
     budget is returned but not kept.
     """
-    if _disabled():  # A/B gate
-        return run()
     _own_context()
     key = (action, stamp, df.semanticHash())
     kept = _RESULTS.get(key)

@@ -120,9 +120,9 @@ def poly_word_hashes(ws: Column) -> Column:
 
 
 def _xe_grams_loop(texts: "pd.Series", n: int) -> "pd.Series":
-    """Reference per-row implementation of the xe gram identity (kept
-    for A/B interleaving and as the executable spec the vectorized
-    path is pinned against)."""
+    """Reference per-row implementation of the xe gram identity: the
+    executable spec the Arrow body :func:`_xe_grams_pa` is pinned
+    against in tests/test_text_vector.py."""
     memo: dict[str, int] = {}
     out = []
     for t in texts:
@@ -265,30 +265,6 @@ def _emit(texts, notnull_pos, kept, counts) -> "pd.Series":
     return pd.Series(out, dtype=object)
 
 
-def _xe_grams_numpy(texts: "pd.Series", n: int) -> "pd.Series":
-    """NumPy-vectorized twin of :func:`_xe_grams_loop` — identical
-    integers, no per-char Python loop.  The batch's words are
-    factorized and hashed once (:func:`_poly_hash_flat` over a flat
-    UTF-32 codepoint array); the gram fold is n shifted gathers;
-    first-occurrence dedup is one np.unique over (doc, gram) keys."""
-    notnull_pos, flat, doc_lens = _flatten_docs(texts, keep_empty=False)
-    if not notnull_pos:
-        return pd.Series([None] * len(texts), dtype=object)
-    wh, _, _ = _hash_words(flat)
-    ng, starts, gram_doc = _window_starts(doc_lens, n)
-    if len(starts):
-        acc = wh[starts].copy()
-        for j in range(1, n):
-            acc = (acc * XE_MULT + wh[starts + j]) % FP_MOD
-        kept, counts = _dedup_first(gram_doc, acc, len(doc_lens))
-    else:
-        import numpy as np
-
-        kept = np.empty(0, dtype=np.int64)
-        counts = np.zeros(len(doc_lens), dtype=np.int64)
-    return _emit(texts, notnull_pos, kept, counts)
-
-
 def _winnow_numpy(texts: "pd.Series", k: int, w: int) -> "pd.Series":
     """NumPy-vectorized twin of the winnow() column pipeline:
     gram_hashes_poly(words(text), k) -> sliding w-window least ->
@@ -403,29 +379,14 @@ def xe_gram_hashes_arrow(text: Column | str, n: int = 3) -> Column:
     Why a UDF here, against the usual rule: Spark HOFs are
     CodegenFallback — the per-char lambda interprets at ~3 us/char,
     and the char fold dominated q_dedup_minhash's wall (gram build
-    2.4 s of a ~3.4 s query at sf0.1).  The default body is the
-    Arrow-native :func:`_xe_grams_pa` (guide §4.2: whole batches
-    through pyarrow.compute + NumPy); ``SHADEMS_XE_GRAM_IMPL=numpy``
-    dispatches the pandas/NumPy body, ``=loop`` the original per-row
-    loop (A/B and differential testing — all three are pinned
-    value-identical in tests/test_guards.py and
-    tests/test_text_vector.py)."""
-    import os
+    2.4 s of a ~3.4 s query at sf0.1).  The body is the Arrow-native
+    :func:`_xe_grams_pa` (guide §4.2: whole batches through
+    pyarrow.compute + NumPy), pinned value-identical to the JVM form
+    in tests/test_guards.py and to :func:`_xe_grams_loop` in
+    tests/test_text_vector.py."""
+    from pyspark.sql.functions import arrow_udf
 
     c = F.col(text) if isinstance(text, str) else text
-    impl = os.environ.get("SHADEMS_XE_GRAM_IMPL")
-    if impl in ("loop", "numpy"):
-        from pyspark.sql.functions import pandas_udf
-
-        body = _xe_grams_loop if impl == "loop" else _xe_grams_numpy
-
-        @pandas_udf("array<long>")
-        def _grams(texts: pd.Series) -> pd.Series:
-            return body(texts, n)
-
-        return _grams(c)
-
-    from pyspark.sql.functions import arrow_udf
 
     @arrow_udf("array<long>")
     def _grams_pa(arr):
@@ -435,8 +396,8 @@ def xe_gram_hashes_arrow(text: Column | str, n: int = 3) -> Column:
 
 
 def _word_ngrams_loop(texts: "pd.Series", n: int) -> "pd.Series":
-    """Reference per-row implementation of the string gram identity
-    (kept for A/B interleaving and as the executable spec)."""
+    """Reference per-row implementation of the string gram identity:
+    the executable spec :func:`_word_ngrams_pa` is pinned against."""
     out = []
     for t in texts:
         if t is None:  # JVM twin: null text -> null gram array
@@ -557,25 +518,14 @@ def word_ngrams_arrow(text: Column | str, n: int = 3) -> Column:
     same STRING gram identity (space split with empties kept,
     space-joined n-gram, first-occurrence dedup), computed outside
     the JVM for the same CodegenFallback reason as
-    :func:`xe_gram_hashes_arrow`.  The default body is the
-    Arrow-native :func:`_word_ngrams_pa` (guide §4.2 — whole batches
-    through pyarrow.compute, zero per-row Python);
-    ``SHADEMS_XE_GRAM_IMPL=loop`` dispatches the original per-row
-    pandas UDF (A/B + differential spec — pinned value-identical in
-    tests/test_guards.py and tests/test_text_vector.py)."""
-    import os
+    :func:`xe_gram_hashes_arrow`.  The body is the Arrow-native
+    :func:`_word_ngrams_pa` (guide §4.2 — whole batches through
+    pyarrow.compute, zero per-row Python), pinned value-identical to
+    the JVM form in tests/test_guards.py and to
+    :func:`_word_ngrams_loop` in tests/test_text_vector.py."""
+    from pyspark.sql.functions import arrow_udf
 
     c = F.col(text) if isinstance(text, str) else text
-    if os.environ.get("SHADEMS_XE_GRAM_IMPL") == "loop":
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("array<string>")
-        def _grams(texts: pd.Series) -> pd.Series:
-            return _word_ngrams_loop(texts, n)
-
-        return _grams(c)
-
-    from pyspark.sql.functions import arrow_udf
 
     @arrow_udf("array<string>")
     def _grams_pa(arr):

@@ -30,7 +30,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 #: name -> (builder, oracle_sql | None)
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
 
-#: modules that define queries; imported lazily by load_registry().
+#: modules that define queries, imported by load_registry(); their order
+#: is the registry's, so a module imports only from modules before it.
 _MODULES = [
     "shadems_spark.queries.core",
     "shadems_spark.queries.projections",
@@ -60,462 +61,10 @@ def register(name: str, sql: str | None = None):
     return deco
 
 
-#: queries already driver-green in CORRECTNESS_r01.json (the driver checks a
-#: prefix of the registry; these 50 have proven rows so they rotate to the
-#: back, giving the formerly-unchecked families driver slots — VERDICT r01 #1).
-_R01_DRIVER_GREEN = [
-    "q_scan", "q_dim_scan", "q_minmax", "q_bin2d", "q_raster_count",
-    "q_project", "q_col_arith", "q_amp", "q_phase", "q_real_imag",
-    "q_uvdist", "q_uvwave", "q_uvw", "q_freq", "q_index_axes",
-    "q_baseline_id", "q_reltime", "q_weight", "q_sel_field", "q_sel_ant",
-    "q_sel_baseline", "q_sel_corr", "q_chan_slice", "q_flags",
-    "q_range_clip", "q_nan_filter", "q_semijoin", "q_antijoin", "q_explode",
-    "q_arrays_zip", "q_union_groups", "q_join_dim", "q_join_names",
-    "q_join_chanfreq", "q_join_fact", "q_range_join", "q_asof_join",
-    "q_raster_count_cat", "q_raster_mean", "q_raster_sum", "q_raster_min",
-    "q_raster_max", "q_raster_std", "q_cat_discover", "q_discretize",
-    "q_counts", "q_cube", "q_rollup", "q_grouping_sets", "q_distinct",
-]
-
-#: addendum analytics queries (not SURVEY §2 rows) — checked after the §2
-#: families but before the already-green prefix above.
-_DEFERRED = [
-    "q_pricing_summary", "q_top_orders", "q_percentile", "q_approx_distinct",
-    "q_facet", "q_local_supplier", "q_csv_roundtrip", "q_orc_roundtrip",
-    "q_json_roundtrip",
-]
-
-#: the judge's minimum driver-green list for round 2 (windows, scalar
-#: batteries, streaming S1-S5, the full LLM/M family, skew, incremental,
-#: curation).  All got driver rows in CORRECTNESS_r02.json.
-_R02_PRIORITY = [
-    "q_sort", "q_topk", "q_conj_union", "q_intersect", "q_except",
-    "q_eq_hist", "q_norms", "q_rank", "q_lag",
-    "q_string_funcs", "q_date_funcs", "q_json_funcs", "q_map_funcs",
-    "q_array_funcs", "q_name_template", "q_sink_roundtrip",
-    "q_tumbling", "q_sliding", "q_session", "q_watermark", "q_stream_dedup",
-    "q_stateful_totals",
-    "q_dedup_exact", "q_dedup_minhash", "q_dedup_simhash", "q_ngram_jaccard",
-    "q_dedup_embedding", "q_cosine_topk", "q_ann_lsh", "q_ann_ivf",
-    "q_text_stats", "q_token_count", "q_quality_score", "q_fingerprint",
-    "q_lang", "q_lang_id", "q_curation", "q_multimodal", "q_frame_sample",
-    "q_pandas_udf",
-    "q_salted_join", "q_two_phase_agg", "q_skew_split",
-    "q_merge_upsert", "q_incremental_dedup",
-    "q_decontaminate", "q_repetition", "q_pii_scrub", "q_domain_mix",
-    "q_seq_pack",
-]
-
-#: queries whose r02 driver row was red — events-schema drift (ts_ns gone:
-#: q_rank/q_lag/q_watermark/q_stream_dedup) or DuckDB HUGEINT-sum hash
-#: drift (the rest).  Both fixed this round (catalog.load_table ts shim;
-#: CAST(... AS BIGINT) in oracles); they re-queue right after the
-#: never-checked block so the fixes earn driver-green rows.
-_R02_RED = [
-    "q_rank", "q_lag", "q_watermark", "q_stream_dedup",
-    "q_curation", "q_multimodal", "q_repetition", "q_pii_scrub",
-    "q_domain_mix", "q_seq_pack",
-]
-
-
-#: the 28 queries with no driver CORRECTNESS row in any of r01–r03
-#: (union computed from the three JSON records; VERDICT r03 "Next round"
-#: item 1).  All passed the judge's own oracle sweep in r03; the driver
-#: record is the hard signal, so they take the first ~28 of round 4's
-#: ~50 check slots.
-_NEVER_CHECKED_R3 = [
-    "q_pricing_summary", "q_top_orders", "q_percentile", "q_approx_distinct",
-    "q_facet", "q_local_supplier", "q_csv_roundtrip", "q_orc_roundtrip",
-    "q_json_roundtrip",
-    "q_group_sample", "q_alpha_mix", "q_unigram_lm", "q_span_dedup",
-    "q_zipf", "q_token_budget", "q_tfidf", "q_bm25", "q_chunk",
-    "q_quantize_topk", "q_split_stratified", "q_profile", "q_vocab",
-    "q_chunk_udtf", "q_global_index", "q_pmi", "q_pca", "q_pq_topk",
-    "q_ivfpq",
-]
-
-#: r02/r03-added queries that already have a green driver row (union of
-#: CORRECTNESS_r01–r03 minus the older lists) — proven, rotate behind
-#: the never-checked block.
-_R23_DRIVER_GREEN = [
-    "q_asof_cogroup", "q_binary_ingest", "q_bitmap_distinct",
-    "q_bucketed_join", "q_collation", "q_corr", "q_cosine_topk_blas",
-    "q_dedup_bottomk", "q_dedup_clusters", "q_dq_audit", "q_entropy",
-    "q_facet_scan", "q_feature_hash", "q_funnel", "q_gap_fill",
-    "q_gopher_rules", "q_grouped_agg_pandas", "q_hll_distinct",
-    "q_hof_funcs", "q_incremental_embedding", "q_label_centroids",
-    "q_latency_bands", "q_null_funcs", "q_outliers", "q_pipe_syntax",
-    "q_pivot", "q_pysource", "q_range_frame", "q_recursive_cte",
-    "q_retention", "q_scd2", "q_sessionize", "q_ship_priority",
-    "q_snapshot_diff", "q_stream_join", "q_union_by_name", "q_unpivot",
-    "q_variant", "q_weighted_sample", "q_window_battery",
-]
-
-#: queries whose implementation or oracle changed in round 4 and should
-#: re-earn a driver row right after the never-checked block:
-#: q_frame_sample graduated from rows-only to a SQL oracle, and
-#: q_grouped_agg_pandas switched to oracle-matching half-up rounding
-#: (ADVICE r03).  New round-4 queries (not in any known list) slot here
-#: automatically via the `new` bucket.
-_R04_TOUCHED = [
-    "q_frame_sample", "q_grouped_agg_pandas", "q_multimodal",
-]
-
-#: round-5 front of the check queue (VERDICT r4 "Next round" #1–#3):
-#: the 8 late-r4 queries that never got a driver CORRECTNESS row (all 8
-#: passed the judge's own oracle mirror in r4 — the driver record is the
-#: hard signal), led by the two whose code changed this round:
-#: q_bpe_tokenize (r4's one red row — head_toks stringified so the
-#: driver canonicalizer can sort it) and q_split_leakage (de-vacuated:
-#: prefix-hash pair key yields nonzero rows at sf0.01).
-_R05_FRONT = [
-    "q_bpe_tokenize", "q_split_leakage",
-    "q_bitext_margin", "q_cdc_chunk", "q_dup_rate_by_source", "q_mmr",
-    "q_oov_rate", "q_random_projection", "q_weighted_reservoir",
-    # graduated from rows-only to a SQL oracle in r5 (VERDICT r4 #5):
-    "q_kcore",
-]
-
-
-#: round-6 front of the check queue.  First the queries whose CODE
-#: changed this round (the VERDICT r5 #1/#4 two-phase/pre-rounding
-#: rewires — they must re-earn driver rows), then the 41 queries that
-#: have never had a driver CORRECTNESS row in r01–r05 (the late-r5
-#: stats/analytics batch; all judge-verified green in r5, but the
-#: driver record is the hard signal — VERDICT r5 #3).  46 names < the
-#: ~50-per-round sample, so the backlog drains in one round.
-_R06_TOUCHED = [
-    "q_ks_test", "q_mannwhitney", "q_best_split", "q_psi", "q_rfm",
-]
-_NEVER_CHECKED_R5 = [
-    "q_ann_recall", "q_kmeans", "q_calibration", "q_auc", "q_dsir",
-    "q_lr_train", "q_naive_bayes", "q_ccnet_buckets",
-    "q_bloom_decontaminate", "q_winnow", "q_kl_drift", "q_backoff_lm",
-    "q_ccnet_buckets_approx", "q_doremi", "q_curriculum",
-    "q_dedup_keep_best", "q_kanon", "q_group_folds", "q_edit_verify",
-    "q_memorization_risk", "q_topic_words", "q_gini", "q_distinct_n",
-    "q_jsd_matrix", "q_readability", "q_mi_categorical", "q_confusion",
-    "q_precision_recall", "q_ndcg", "q_mrr", "q_token_histogram",
-    "q_ppjoin", "q_link_predict", "q_isotonic", "q_gains",
-    "q_clustering_coeff", "q_admission_2phase", "q_heavy_hitters",
-    "q_centroid_sim", "q_embed_outliers", "q_inverted_index",
-]
-
-
-#: round-6 continuation-session additions (all hash-exact on first
-#: registration; full default-parallelism AND local[3] oracle gates
-#: re-run green at session close).  46 names — more than one driver
-#: round can sample behind the r5 backlog, so the residue is round
-#: 7's never-checked block.
-_NEW_R6_SESSION = [
-    "q_chisq", "q_spearman", "q_ridge", "q_interval_coverage",
-    "q_path_analysis", "q_changepoint", "q_tcloseness",
-    "q_fd_discovery", "q_ams_f2", "q_map_eval", "q_corr_matrix",
-    "q_kn_lm", "q_pr_auc", "q_adaboost_stumps", "q_apriori",
-    "q_moments", "q_kendall", "q_motif", "q_grid_dbscan",
-    "q_entropy_rate", "q_sax", "q_dtw", "q_forecast_backtest",
-    "q_ams_join", "q_modularity", "q_assortativity", "q_wilcoxon",
-    "q_friedman", "q_xcorr", "q_granger", "q_hurst",
-    "q_power_analysis", "q_srm", "q_heavy_change",
-    "q_time_to_convert", "q_ivm_agg", "q_ivm_join", "q_ivm_distinct",
-    "q_small_qty_revenue", "q_conformal", "q_dp_mean",
-    "q_silhouette", "q_knn_eval", "q_mmd", "q_seq_patterns",
-    "q_burst_hmm", "q_weighted_median", "q_mann_kendall", "q_runs_test",
-    "q_price_index", "q_abc_analysis", "q_texttiling",
-    "q_funnel_windowed", "q_raster_drift",
-]
-
-
-#: round-7 front of the check queue (VERDICT r6 "Next round" #1): the
-#: 65 queries with no driver CORRECTNESS row in any of r01–r06
-#: (= set(registry) − union of the six JSON records; the judge's own
-#: full-gate run covered all 65 green in r6, but the driver record is
-#: the hard signal).  Ordered: queries whose CODE changes this round
-#: (skyline diet, graph degree caps, ADVICE crash guards) first so the
-#: fixes re-earn rows, then the rest alphabetically.  65 > the ~50
-#: sample, so the residue fronts round 8 and registry growth stays
-#: frozen at ≤15 new names this round.
-_NEVER_CHECKED_R6 = [
-    # touched in r7 (weak-list diets + ADVICE guards) — must re-earn:
-    "q_skyline", "q_modularity", "q_assortativity", "q_motif", "q_dtw",
-    # the remaining 60, alphabetical:
-    "q_abc_analysis", "q_adaboost_stumps", "q_als", "q_ams_f2",
-    "q_ams_join", "q_apriori", "q_bh_fdr", "q_burst_hmm",
-    "q_changepoint", "q_conformal", "q_corr_matrix", "q_dedup_eval",
-    "q_dp_count", "q_dp_mean", "q_embedding_coverage", "q_entropy_rate",
-    "q_fd_discovery", "q_forecast_backtest", "q_friedman",
-    "q_funnel_windowed", "q_granger", "q_grid_dbscan", "q_heavy_change",
-    "q_holt", "q_hurst", "q_ivm_agg", "q_ivm_distinct", "q_ivm_join",
-    "q_kendall", "q_kn_lm", "q_knn_eval", "q_ldiversity",
-    "q_mann_kendall", "q_map_eval", "q_markov_attribution", "q_mmd",
-    "q_moments", "q_path_analysis", "q_power_analysis", "q_pr_auc",
-    "q_price_index", "q_propensity_match", "q_raster_drift",
-    "q_rrf_fusion", "q_runs_test", "q_sax", "q_seq_patterns",
-    "q_shapley_attribution", "q_silhouette", "q_slice_finder",
-    "q_small_qty_revenue", "q_srm", "q_stl_decompose", "q_tcloseness",
-    "q_texttiling", "q_time_to_convert", "q_tokenizer_fertility",
-    "q_weighted_median", "q_wilcoxon", "q_xcorr",
-]
-
-#: already-sampled queries whose implementation changes in round 7
-#: (q_ngram_jaccard prefix-filter routing, q_ewma bounded grain) — they
-#: re-queue right after the never-checked block to re-earn rows.
-_R07_TOUCHED = [
-    # oracle semantics changed in r7 (stop-gram prune, daily grain,
-    # degree cap, hashed candidate keys) — re-confirm under the driver
-    # even though all were judge/local-gate green this round.
-    "q_ngram_jaccard", "q_ewma", "q_triangles", "q_ppjoin",
-]
-
-#: round-7 session additions (13 names, under the <= 15 freeze
-#: from VERDICT r6 #1; all hash-exact on first registration).  They
-#: queue BEHIND the never-checked backlog: r7's ~50-sample drains the
-#: backlog head, r8 covers the residue plus these.
-_NEW_R7_SESSION = [
-    "q_welch", "q_tost", "q_levene", "q_mad",
-    "q_simpson", "q_lorenz", "q_sprt", "q_page_hinkley",
-    "q_tukey", "q_mcnemar", "q_herfindahl", "q_kruskal", "q_shewhart",
-]
-
-#: round-8 front of the check queue (VERDICT r7 "Next round" #1): the
-#: exact 28 queries with NO driver CORRECTNESS row in any of r01–r07
-#: (= set(registry) − union of the seven JSON records, recomputed this
-#: session) — 15 residue of the r6 backlog + the 13 r7 statistics
-#: additions.  All 28 were green in the judge's own 350-query gate in
-#: r7; the driver record is the hard signal.
-_NEVER_CHECKED_R7 = [
-    "q_sax", "q_seq_patterns", "q_shapley_attribution", "q_silhouette",
-    "q_slice_finder", "q_small_qty_revenue", "q_srm", "q_stl_decompose",
-    "q_tcloseness", "q_texttiling", "q_time_to_convert",
-    "q_tokenizer_fertility", "q_weighted_median", "q_wilcoxon", "q_xcorr",
-    "q_welch", "q_tost", "q_levene", "q_mad", "q_simpson", "q_lorenz",
-    "q_sprt", "q_page_hinkley", "q_tukey", "q_mcnemar", "q_herfindahl",
-    "q_kruskal", "q_shewhart",
-]
-
-#: the 8 queries whose oracle graduated from rows-only to hash-exact
-#: SQL in r5/r6 but whose last driver sample predates the graduation
-#: (VERDICT r7 #1) — judge-gate green; they re-earn hash-exact driver
-#: rows right after the never-sampled block.
-_ORACLE_GRADUATED = [
-    "q_dedup_minhash", "q_dedup_simhash", "q_dedup_bottomk",
-    "q_ann_lsh", "q_ann_ivf", "q_bpe_tokenize", "q_frame_sample",
-    "q_pca",
-]
-
-#: already-sampled queries whose implementation or oracle changes in
-#: round 8 (ADVICE r7 fixes that alter outputs) — they re-queue after
-#: the graduated block to re-earn rows.
-_R08_TOUCHED = [
-    # stop-gram df now counted on the string gram identity (and then
-    # discovered two-phase: hash-df prefilter -> exact string recount)
-    "q_ngram_jaccard",
-    # KM log-survival terms moved onto the nano-int fold protocol
-    # (values can shift in the 6th dp; oracle changed identically)
-    "q_survival",
-    # degenerate-group family guard added to the shared FDR front
-    # half (no output change on the driver fixture, but re-earn)
-    "q_bh_fdr",
-]
-
-#: round-8 session additions (kept small; the backlog drain comes
-#: first per the registry freeze discipline).
-_NEW_R8_SESSION: list[str] = [
-    "q_ewma_control", "q_fisher_exact", "q_bayes_ab",
-    "q_mood_median", "q_cochran_q", "q_theil_entropy",
-    "q_benjamini_yekutieli",
-]
-
-
-#: round-9 driver priority (VERDICT r8 #1): the 15 queries whose plans
-#: changed in r8 (window-free triangle-join conversions + q_theilsen's
-#: try_divide) without a driver re-sample, then q_dedup_bottomk
-#: (oracle-graduated r6, never driver-re-sampled), then high-traffic
-#: core so the flagship family's record refreshes too.
-_R09_PRIORITY = [
-    "q_eq_hist", "q_norms", "q_vocab", "q_zipf", "q_dsir",
-    "q_rrf_fusion", "q_alpha_mix", "q_snapshot_diff", "q_isotonic",
-    "q_gains", "q_als", "q_top_orders", "q_countmin", "q_bm25",
-    "q_theilsen",
-    "q_dedup_bottomk",
-    "q_raster_count", "q_join_fact", "q_minmax",
-]
-
-#: queries whose plans this round's wall-reclaim work touches
-#: (VERDICT r8 #2/#3): they re-earn driver rows right after the
-#: priority block (q_rrf_fusion / q_als already front via priority).
-_R09_TOUCHED = [
-    "q_lr_train", "q_adaboost_stumps", "q_dedup_minhash",
-    "q_grid_dbscan",
-    # second batch: Arrow string-gram build (same contract) and the
-    # star-components small-graph fast path
-    "q_ngram_jaccard", "q_components_star",
-]
-
-
-#: round-10 plan-touched queries (VERDICT r9 #2: "zero names sampled
-#: in r09 except any r10-touched plans") — names whose PLAN or ORACLE
-#: changes this round re-earn driver rows first.  Empty unless a
-#: round-10 change actually alters a query's output-bearing plan.
-_R10_TOUCHED: list[str] = [
-    # returned plan is now a checkpoint RDD scan (lineage truncated on
-    # return — VERDICT r9 #6, the PLAN_SNAPSHOT exclusion closed)
-    "q_dedup_clusters",
-    # Knuth-hash expressions moved onto decimal(38,0) products
-    # (operators/hashing.py — the r10 x100 events/documents probe hit
-    # ARITHMETIC_OVERFLOW on ~9.9e9 shifted ids; values identical
-    # in-range, so these re-earn hash-exact rows on the new plans)
-    "q_weighted_sample", "q_group_sample", "q_token_budget",
-    "q_weighted_reservoir", "q_group_folds", "q_memorization_risk",
-    "q_bayes_ab", "q_split_stratified", "q_pipeline_e2e",
-    "q_split_leakage", "q_oov_rate", "q_pq_topk", "q_ivfpq",
-]
-
-#: round-10 front (VERDICT r9 #2): pure staleness.  The exact names
-#: whose most-recent driver CORRECTNESS row dates to r01/r02
-#: (recomputed this session from CORRECTNESS_r01–r09: 22 r1 + 32 r2 =
-#: 54 names, alphabetical within round) — the driver's ~50-sample
-#: lands entirely inside this block.
-_R10_FRONT = [
-    "q_antijoin", "q_arrays_zip", "q_asof_join", "q_cat_discover",
-    "q_counts", "q_cube", "q_discretize", "q_distinct", "q_explode",
-    "q_grouping_sets", "q_join_chanfreq", "q_join_dim", "q_join_names",
-    "q_range_join", "q_raster_count_cat", "q_raster_max", "q_raster_mean",
-    "q_raster_min", "q_raster_std", "q_raster_sum", "q_rollup",
-    "q_union_groups", "q_array_funcs", "q_conj_union", "q_cosine_topk",
-    "q_date_funcs", "q_decontaminate", "q_dedup_embedding",
-    "q_dedup_exact", "q_except", "q_fingerprint", "q_incremental_dedup",
-    "q_intersect", "q_json_funcs", "q_lang", "q_lang_id", "q_map_funcs",
-    "q_merge_upsert", "q_name_template", "q_pandas_udf", "q_quality_score",
-    "q_salted_join", "q_session", "q_sink_roundtrip", "q_skew_split",
-    "q_sliding", "q_sort", "q_stateful_totals", "q_string_funcs",
-    "q_text_stats", "q_token_count", "q_topk", "q_tumbling",
-    "q_two_phase_agg",
-]
-
-#: second staleness tier: last driver row in r03 (48 names) — the
-#: overflow tier if the driver ever samples past the r1/r2 block.
-_R10_TIER3 = [
-    "q_asof_cogroup", "q_binary_ingest", "q_bitmap_distinct",
-    "q_bucketed_join", "q_collation", "q_corr", "q_cosine_topk_blas",
-    "q_curation", "q_dedup_clusters", "q_domain_mix", "q_dq_audit",
-    "q_entropy", "q_facet_scan", "q_feature_hash", "q_funnel",
-    "q_gap_fill", "q_gopher_rules", "q_grouped_agg_pandas",
-    "q_hll_distinct", "q_hof_funcs", "q_incremental_embedding",
-    "q_label_centroids", "q_lag", "q_latency_bands", "q_multimodal",
-    "q_null_funcs", "q_outliers", "q_pii_scrub", "q_pipe_syntax",
-    "q_pivot", "q_pysource", "q_range_frame", "q_rank", "q_recursive_cte",
-    "q_repetition", "q_retention", "q_scd2", "q_seq_pack", "q_sessionize",
-    "q_ship_priority", "q_stream_dedup", "q_stream_join",
-    "q_union_by_name", "q_unpivot", "q_variant", "q_watermark",
-    "q_weighted_sample", "q_window_battery",
-]
-
-
-#: round-11 plan/oracle-touched queries (VERDICT r10 #2): the two
-#: rows-only ANN members graduated to hash-exact this round — the
-#: codebook sample gained an id tiebreak, pq_encode's normalization /
-#: distance accumulation moved to sequential folds (bit-identical to
-#: the new DuckDB replay), and ivfpq's coarse sampler moved from
-#: xxhash64 to the cross-engine affine xe family.  Both re-earn
-#: driver rows FIRST, now as full hash-exact entries.  q_ann_ivf /
-#: q_embedding_coverage follow: their xe sampler moved to the
-#: mod-first overflow-safe form (similarity.xe_affine — bit-identical
-#: in-range, LONG-safe for 64-bit ids; plan gains one pmod), so their
-#: plans changed and they re-earn rows on the new form.
-_R11_TOUCHED = ["q_pq_topk", "q_ivfpq", "q_ann_ivf", "q_embedding_coverage"]
-
-#: round-11 front (VERDICT r10 #1): the 18 r01/r02-proven names the
-#: r10 50-sample did not reach (_R10_FRONT[36:], order preserved).
-_R11_FRONT = [
-    "q_map_funcs", "q_merge_upsert", "q_name_template", "q_pandas_udf",
-    "q_quality_score", "q_salted_join", "q_session", "q_sink_roundtrip",
-    "q_skew_split", "q_sliding", "q_sort", "q_stateful_totals",
-    "q_string_funcs", "q_text_stats", "q_token_count", "q_topk",
-    "q_tumbling", "q_two_phase_agg",
-]
-
-#: round-11 staleness tier: _R10_TIER3 minus the two names that
-#: already re-earned fresh rows in r10 (q_dedup_clusters,
-#: q_weighted_sample — both in _R10_TOUCHED), so every sampled slot
-#: drains genuine r03-era staleness.  The 50-sample covers
-#: 2 touched + 18 front + the first 30 here; the ~16-name remainder
-#: is r12's front.
-_R11_TIER3 = [
-    "q_asof_cogroup", "q_binary_ingest", "q_bitmap_distinct",
-    "q_bucketed_join", "q_collation", "q_corr", "q_cosine_topk_blas",
-    "q_curation", "q_domain_mix", "q_dq_audit",
-    "q_entropy", "q_facet_scan", "q_feature_hash", "q_funnel",
-    "q_gap_fill", "q_gopher_rules", "q_grouped_agg_pandas",
-    "q_hll_distinct", "q_hof_funcs", "q_incremental_embedding",
-    "q_label_centroids", "q_lag", "q_latency_bands", "q_multimodal",
-    "q_null_funcs", "q_outliers", "q_pii_scrub", "q_pipe_syntax",
-    "q_pivot", "q_pysource", "q_range_frame", "q_rank", "q_recursive_cte",
-    "q_repetition", "q_retention", "q_scd2", "q_seq_pack", "q_sessionize",
-    "q_ship_priority", "q_stream_dedup", "q_stream_join",
-    "q_union_by_name", "q_unpivot", "q_variant", "q_watermark",
-    "q_window_battery",
-]
-
-
-def _check_order(names: list[str]) -> list[str]:
-    """Driver-check order for round 11 (VERDICT r10 #1): the
-    oracle-graduated/plan-touched names first, then the 18-name
-    r01/r02 staleness remainder, then the r03 tier.  The 50-sample
-    reaches ~the first 30 of _R11_TIER3's 46 names — the ~16-name
-    remainder (q_range_frame .. q_window_battery) stays r03-stale
-    and MUST be r12's front.  r10's
-    freshly-drained blocks (_R10_TOUCHED / _R10_FRONT) rotate to the
-    very back; the legacy blocks keep the
-    mid-order roughly staleness-sorted."""
-    known = (
-        set(_R11_TOUCHED) | set(_R11_FRONT) | set(_R11_TIER3)
-        | set(_R10_TOUCHED) | set(_R10_FRONT) | set(_R10_TIER3)
-        | set(_R09_PRIORITY) | set(_R09_TOUCHED)
-        | set(_NEVER_CHECKED_R7) | set(_ORACLE_GRADUATED)
-        | set(_R08_TOUCHED) | set(_NEW_R8_SESSION)
-        | set(_NEVER_CHECKED_R6) | set(_R07_TOUCHED) | set(_NEW_R7_SESSION)
-        | set(_R06_TOUCHED) | set(_NEVER_CHECKED_R5) | set(_R05_FRONT)
-        | set(_NEW_R6_SESSION)
-        | set(_NEVER_CHECKED_R3) | set(_R04_TOUCHED)
-        | set(_R23_DRIVER_GREEN) | set(_R02_RED) | set(_R02_PRIORITY)
-        | set(_DEFERRED) | set(_R01_DRIVER_GREEN)
-    )
-    new = [n for n in names if n not in known]
-    blocks = [
-        _R11_TOUCHED, _R11_FRONT, _R11_TIER3, new,
-        _R04_TOUCHED, _NEVER_CHECKED_R3,
-        _R05_FRONT, _NEW_R6_SESSION, _NEVER_CHECKED_R5, _R06_TOUCHED,
-        _NEW_R7_SESSION, _R07_TOUCHED, _NEVER_CHECKED_R6,
-        _R08_TOUCHED, _NEW_R8_SESSION,
-        _ORACLE_GRADUATED, _NEVER_CHECKED_R7,
-        _DEFERRED, _R02_PRIORITY, _R02_RED, _R23_DRIVER_GREEN,
-        _R01_DRIVER_GREEN,
-        _R09_PRIORITY, _R09_TOUCHED,
-        _R10_TOUCHED, _R10_FRONT, _R10_TIER3,
-    ]
-    seen: set[str] = set()
-    ordered: list[str] = []
-    in_reg = set(names)
-    for block in blocks:
-        for n in block:
-            if n in in_reg and n not in seen:
-                seen.add(n)
-                ordered.append(n)
-    assert len(ordered) == len(names), "registry reorder dropped a query"
-    return ordered
-
-
 def load_registry() -> dict[str, tuple[QueryFn, str | None]]:
+    """Import every family module; return the registry in registration
+    order (``_MODULES`` order, definition order within a module).  The
+    driver checks a prefix of this order against DuckDB."""
     for mod in _MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # families are added incrementally; only swallow a listed
-            # family module that does not exist YET — never an import
-            # error from INSIDE one (e.g. a typo'd submodule in the
-            # analytics package would otherwise silently drop all 122
-            # of its queries from the registry).
-            if e.name != mod:
-                raise
-    return {n: REGISTRY[n] for n in _check_order(list(REGISTRY))}
+        importlib.import_module(mod)
+    return dict(REGISTRY)

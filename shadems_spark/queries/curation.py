@@ -23,6 +23,7 @@ from shadems_spark.operators.curation import (
     stratified_sample,
 )
 from shadems_spark.queries import register
+from shadems_spark.queries.llm_ops import _NB_SQL
 
 #: (stratum, keep-rate) mixture used by q_domain_mix on both engines.
 _MIX = [("en", 0.5), ("de", 0.8), ("es", 0.25), ("fr", 1.0), ("zh", 0.1)]
@@ -1035,53 +1036,6 @@ def q_lr_train(spark, sf_dir):
         "w_nano",
         F.round(F.col("w_nano") / F.lit(1_000_000_000.0), 9).alias("weight"),
     ).orderBy("feature")
-
-
-_NB_SQL = """
-    WITH base AS (SELECT doc_id, lang,
-                         list_filter(string_split(text, ' '),
-                                     x -> len(x) > 0) AS ws
-                  FROM documents),
-    trt AS (SELECT lang, unnest(ws) AS u FROM base WHERE doc_id % 5 <> 0),
-    wc AS (SELECT lang, u, count(*) AS n FROM trt GROUP BY ALL),
-    tk AS (SELECT lang, CAST(sum(n) AS BIGINT) AS tok FROM wc GROUP BY 1),
-    v AS (SELECT count(DISTINCT u) AS V FROM wc),
-    ll AS (SELECT wc.lang, wc.u,
-                  CAST(round(ln((wc.n + 1) / CAST(tk.tok + v.V AS DOUBLE))
-                             * 1000000000.0) AS BIGINT) AS ll_nano
-           FROM wc JOIN tk USING (lang), v),
-    un AS (SELECT tk.lang,
-                  CAST(round(ln(1.0 / (tk.tok + v.V)) * 1000000000.0)
-                       AS BIGINT) AS un_nano
-           FROM tk, v),
-    nd AS (SELECT lang, count(*) AS ndc FROM base
-           WHERE doc_id % 5 <> 0 GROUP BY 1),
-    ntot AS (SELECT CAST(sum(ndc) AS BIGINT) AS ntd FROM nd),
-    pri AS (SELECT lang,
-                   CAST(round(ln(ndc / CAST(ntd AS DOUBLE)) * 1000000000.0)
-                        AS BIGINT) AS prior_nano
-            FROM nd, ntot),
-    tc AS (SELECT doc_id, actual, u, count(*) AS c
-           FROM (SELECT doc_id, lang AS actual, unnest(ws) AS u
-                 FROM base WHERE doc_id % 5 = 0)
-           GROUP BY ALL),
-    sc0 AS (SELECT tc.doc_id, tc.actual, pri.lang AS cand, pri.prior_nano,
-                   CAST(sum(tc.c * coalesce(ll.ll_nano, un.un_nano))
-                        AS BIGINT) AS s
-            FROM tc
-            CROSS JOIN pri
-            JOIN un ON un.lang = pri.lang
-            LEFT JOIN ll ON ll.lang = pri.lang AND ll.u = tc.u
-            GROUP BY 1, 2, 3, 4),
-    sc AS (SELECT doc_id, actual, cand, prior_nano + s AS score_nano
-           FROM sc0),
-    rk AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-                                        ORDER BY score_nano DESC, cand) AS rn
-           FROM sc)
-    SELECT doc_id, actual, cand AS pred, score_nano,
-           CAST(CASE WHEN cand = actual THEN 1 ELSE 0 END AS INT) AS correct
-    FROM rk WHERE rn = 1 ORDER BY doc_id
-"""
 
 
 @register("q_naive_bayes", sql=_NB_SQL)

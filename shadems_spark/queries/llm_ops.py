@@ -297,25 +297,12 @@ def q_ngram_jaccard(spark, sf_dir):
     # The raw gram table persists FIRST so the expensive split +
     # 3-gram scan of documents runs once — both the df aggregate
     # (stop-tail discovery) and the anti-join probe side read the
-    # cache, not the parquet.  explode_outer + isNotNull (not plain
-    # explode): Catalyst pushes explode's implicit size(arr)>0 filter
-    # into the scan, re-evaluating the whole gram expression per row.
-    import os
-
-    if (
-        os.environ.get("SHADEMS_XE_GRAM_IMPL") not in ("loop", "numpy")
-        and os.environ.get("SHADEMS_GRAM_FUSE") != "0"
-    ):
-        # fused gram rows (r12, VERDICT r11 #5): MapInArrow emits
-        # (doc_id, ng) directly — no Generate node and no per-row gram
-        # ARRAY ever materializes; row-identical to the explode_outer
-        # + isNotNull form below (null/empty docs emit nothing).
-        raw = T.doc_grams_fused(docs, "doc_id", "text", 3, "word")
-    else:
-        raw = docs.select(
-            "doc_id",
-            F.explode_outer(T.word_ngrams_arrow("text", 3)).alias("ng"),
-        ).filter(F.col("ng").isNotNull())
+    # cache, not the parquet.  The gram rows are fused (r12, VERDICT
+    # r11 #5): MapInArrow emits (doc_id, ng) directly — no Generate
+    # node and no per-row gram ARRAY ever materializes; row-identical
+    # to explode_outer(word_ngrams_arrow) + isNotNull (null/empty docs
+    # emit nothing).
+    raw = T.doc_grams_fused(docs, "doc_id", "text", 3, "word")
     grams = D.tracked_persist(raw, key="ngram_grams_raw")
     # The STOP-GRAM set (df > 1000) is bounded at total_occurrences /
     # 1000 rows by construction (pigeonhole) — broadcastable at any
@@ -1988,9 +1975,56 @@ def q_auc(spark, sf_dir):
     )
 
 
-from shadems_spark.queries.curation import _NB_SQL as _NB_SQL_FULL
+#: oracle of curation.q_naive_bayes, shared with the NB metrics below.  It
+#: lives here because a query module imports only from modules before it
+#: in ``_MODULES``, which keeps the registry in module order.
+_NB_SQL = """
+    WITH base AS (SELECT doc_id, lang,
+                         list_filter(string_split(text, ' '),
+                                     x -> len(x) > 0) AS ws
+                  FROM documents),
+    trt AS (SELECT lang, unnest(ws) AS u FROM base WHERE doc_id % 5 <> 0),
+    wc AS (SELECT lang, u, count(*) AS n FROM trt GROUP BY ALL),
+    tk AS (SELECT lang, CAST(sum(n) AS BIGINT) AS tok FROM wc GROUP BY 1),
+    v AS (SELECT count(DISTINCT u) AS V FROM wc),
+    ll AS (SELECT wc.lang, wc.u,
+                  CAST(round(ln((wc.n + 1) / CAST(tk.tok + v.V AS DOUBLE))
+                             * 1000000000.0) AS BIGINT) AS ll_nano
+           FROM wc JOIN tk USING (lang), v),
+    un AS (SELECT tk.lang,
+                  CAST(round(ln(1.0 / (tk.tok + v.V)) * 1000000000.0)
+                       AS BIGINT) AS un_nano
+           FROM tk, v),
+    nd AS (SELECT lang, count(*) AS ndc FROM base
+           WHERE doc_id % 5 <> 0 GROUP BY 1),
+    ntot AS (SELECT CAST(sum(ndc) AS BIGINT) AS ntd FROM nd),
+    pri AS (SELECT lang,
+                   CAST(round(ln(ndc / CAST(ntd AS DOUBLE)) * 1000000000.0)
+                        AS BIGINT) AS prior_nano
+            FROM nd, ntot),
+    tc AS (SELECT doc_id, actual, u, count(*) AS c
+           FROM (SELECT doc_id, lang AS actual, unnest(ws) AS u
+                 FROM base WHERE doc_id % 5 = 0)
+           GROUP BY ALL),
+    sc0 AS (SELECT tc.doc_id, tc.actual, pri.lang AS cand, pri.prior_nano,
+                   CAST(sum(tc.c * coalesce(ll.ll_nano, un.un_nano))
+                        AS BIGINT) AS s
+            FROM tc
+            CROSS JOIN pri
+            JOIN un ON un.lang = pri.lang
+            LEFT JOIN ll ON ll.lang = pri.lang AND ll.u = tc.u
+            GROUP BY 1, 2, 3, 4),
+    sc AS (SELECT doc_id, actual, cand, prior_nano + s AS score_nano
+           FROM sc0),
+    rk AS (SELECT *, row_number() OVER (PARTITION BY doc_id
+                                        ORDER BY score_nano DESC, cand) AS rn
+           FROM sc)
+    SELECT doc_id, actual, cand AS pred, score_nano,
+           CAST(CASE WHEN cand = actual THEN 1 ELSE 0 END AS INT) AS correct
+    FROM rk WHERE rn = 1 ORDER BY doc_id
+"""
 
-_NB_CORE = _NB_SQL_FULL.replace("ORDER BY doc_id", "")
+_NB_CORE = _NB_SQL.replace("ORDER BY doc_id", "")
 
 
 @register(

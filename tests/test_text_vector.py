@@ -1,24 +1,26 @@
-"""Differential pins for the NumPy-vectorized xe gram builder
-(operators/text._xe_grams_numpy) against the per-row reference loop
-(_xe_grams_loop).  Pure pandas — no Spark session — so the pin runs in
-milliseconds and covers adversarial shapes the fixture corpus lacks.
-The Spark-level equality of the UDF against the JVM HOF twin is pinned
-separately in tests/test_guards.py::test_arrow_gram_udfs_match_jvm_twins.
+"""Differential pins for the Arrow-native xe gram builder
+(operators/text._xe_grams_pa) against the per-row reference loop
+(_xe_grams_loop), and for the other vectorized text bodies against
+their executable specs.  All but the last test are pure pandas/pyarrow
+— no Spark session — so they run in milliseconds and cover adversarial
+shapes the fixture corpus lacks.  The Spark-level equality of the UDFs
+against the JVM HOF twins is pinned separately in
+tests/test_guards.py::test_arrow_gram_udfs_match_jvm_twins.
 """
 
 import random
 import string
 
 import pandas as pd
+import pyarrow as pa
 
-from shadems_spark.operators.text import _xe_grams_loop, _xe_grams_numpy
+from shadems_spark.operators.text import _xe_grams_loop, _xe_grams_pa
 
 
 def _check(texts, n=3):
-    s = pd.Series(texts, dtype=object)
-    a = _xe_grams_loop(s, n)
-    b = _xe_grams_numpy(s, n)
-    assert list(a) == list(b), f"n={n}: {list(a)} != {list(b)}"
+    want = list(_xe_grams_loop(pd.Series(texts, dtype=object), n))
+    got = _xe_grams_pa(pa.array(texts, type=pa.string()), n).to_pylist()
+    assert got == want, f"n={n}: {got} != {want}"
 
 
 def test_edge_shapes():
@@ -264,21 +266,11 @@ def test_word_ngrams_pa_chunked():
     assert got == want
 
 
-# ---- xe grams arrow-native pin ----
-
-from shadems_spark.operators.text import _xe_grams_pa
-
-
-def _check_xe_pa(texts, n=3):
-    import pyarrow as pa
-
-    want = list(_xe_grams_loop(pd.Series(texts, dtype=object), n))
-    got = _xe_grams_pa(pa.array(texts, type=pa.string()), n).to_pylist()
-    assert got == want, f"n={n}: {got} != {want}"
+# ---- more xe gram shapes ----
 
 
 def test_xe_grams_pa_edges():
-    _check_xe_pa(
+    _check(
         [
             None, "", " ", "   ",
             "one", "one two", "one two three",
@@ -288,14 +280,14 @@ def test_xe_grams_pa_edges():
             "café 你好 😀 end",
         ]
     )
-    _check_xe_pa([None, None])
-    _check_xe_pa([])
+    _check([None, None])
+    _check([])
 
 
 def test_xe_grams_pa_various_n():
     texts = ["the quick brown fox jumps over it", "a b", "a", "", None]
     for n in (1, 2, 3, 4):
-        _check_xe_pa(texts, n)
+        _check(texts, n)
 
 
 def test_xe_grams_pa_random():
@@ -309,7 +301,7 @@ def test_xe_grams_pa_random():
         sep = "  " if i % 17 == 0 else " "
         texts.append(sep.join(rng.choices(vocab, k=rng.randint(0, 30))))
     for n in (2, 3):
-        _check_xe_pa(texts, n)
+        _check(texts, n)
 
 
 # ---- fused (doc, gram)-row generator pin (r12, VERDICT r11 #5) ----
